@@ -1,7 +1,5 @@
 package graft.fed
 
-import org.apache.spark.rdd.RDD
-
 import graft.sources.LayerTensor
 
 /** A1/A2 — FedAvg model aggregation (fl_server.py:60-76).
@@ -11,11 +9,8 @@ import graft.sources.LayerTensor
   * clients have reported; the unsupervised variant is the unweighted
   * `np.mean(weights, axis=0)` (fl_server_unsupervised.py:58-67).
   *
-  * Weights are KB–MB scale, so the canonical path is a driver-side fold
-  * over the collected per-client results — exactly the reference's
-  * topology. `weightedTree` is the scale path for a very large client
-  * fleet: a commutative-associative treeAggregate over an RDD of
-  * updates, O(log n) combine depth, driver only ever holds one model.
+  * Weights are KB–MB scale, so the fold runs on the driver over the
+  * collected per-client results — exactly the reference's topology.
   */
 object FedAvg {
 
@@ -36,19 +31,6 @@ object FedAvg {
   /** A2 — unweighted model mean (every client counts once). */
   def mean(models: Seq[Weights]): Weights = weighted(models.map(1L -> _))
 
-  /** Scale path: same algebra as `weighted`, combined treewise across
-    * executors. Safe because weighted-sum accumulation is commutative
-    * and associative; the single finalize division happens on the
-    * driver.
-    */
-  def weightedTree(updates: RDD[(Long, Weights)]): Weights = {
-    val (acc, n) = updates
-      .map { case (n, w) => (axpy(zeroLike(w), n.toDouble, w), n) }
-      .treeReduce { case ((a1, n1), (a2, n2)) => (addInPlace(a1, a2), n1 + n2) }
-    require(n > 0, "FedAvg with zero total examples")
-    finalize_(acc, n.toDouble)
-  }
-
   // ---- accumulator representation: (layer, shape, double values) ----
   private type Acc = Seq[(Int, Seq[Int], Array[Double])]
 
@@ -64,23 +46,6 @@ object FedAvg {
         s"layer/shape mismatch in FedAvg: ($l,$s) vs (${t.layer},${t.shape})")
       var i = 0
       while (i < av.length) { av(i) += a * t.values(i); i += 1 }
-      (l, s, av)
-    }
-  }
-
-  // the tree path's cross-CLIENT check: axpy above only ever compares a
-  // client against its own zeroLike there, so without this a stale
-  // client with extra layers was silently dropped mid-treeReduce (and
-  // one with fewer crashed far from the cause) — breaking the
-  // documented fold ≡ tree equivalence, whose fold side rejects loudly
-  private def addInPlace(a: Acc, b: Acc): Acc = {
-    require(a.length == b.length,
-      s"layer count mismatch in FedAvg: ${a.length} vs ${b.length}")
-    a.zip(b).map { case ((l, s, av), (bl, bs, bv)) =>
-      require(l == bl && s == bs,
-        s"layer/shape mismatch in FedAvg: ($l,$s) vs ($bl,$bs)")
-      var i = 0
-      while (i < av.length) { av(i) += bv(i); i += 1 }
       (l, s, av)
     }
   }

@@ -36,32 +36,9 @@ trait FedModel extends Serializable {
   *
   * Scale: weights are KB–MB (broadcast-friendly); clients train
   * data-local inside tasks; the collect moves `clients × model-size`,
-  * same as the reference's network traffic. For thousands of clients
-  * swap the collect for `FedAvg.weightedTree`.
+  * same as the reference's network traffic.
   */
 object Federation {
-
-  /** How per-round client updates are combined into the global model.
-    * The algebra is identical across strategies (FedAvgAggregatorSpec /
-    * FedAvgSpec assert fold ≡ tree ≡ Aggregator); they differ in WHERE
-    * the combine runs:
-    *  - DriverFold: collect every (n_i, W_i) and fold on the driver —
-    *    the reference server's topology, right up to thousands of
-    *    clients (weights are KB–MB).
-    *  - TreeAggregate: `FedAvg.weightedTree` — O(log n) combine depth
-    *    across executors, driver receives ONE model. The million-client
-    *    path.
-    *  - SqlAggregator: `FedAvgAggregator` through Spark's aggregation
-    *    machinery (map-side partial buffers + exchange) — same scale
-    *    story as TreeAggregate, and the same code path a SQL-surface
-    *    caller (`updates.select(FedAvgAggregator.column)`) gets.
-    */
-  sealed trait AggStrategy
-  object AggStrategy {
-    case object DriverFold extends AggStrategy
-    case object TreeAggregate extends AggStrategy
-    case object SqlAggregator extends AggStrategy
-  }
 
   final case class RoundLog(round: Int, totalExamples: Long,
                             clientMetrics: Seq[(String, Map[String, Double])])
@@ -89,8 +66,9 @@ object Federation {
     *   optimizer slots; deterministic, weights-correct fallback.)
     * @param initial    round-0 global weights (the reference server
     *   builds a throwaway model just for these, fl_server.py:211-212)
-    * @param weightsDir if set, checkpoint `weights_graphID:{gid}_V{r}`
-    *   per round (S9 parity, fl_server.py:79-80)
+    * @param weightsDir if set, checkpoint `weights_graphID_{gid}_V{r}`
+    *   per round (S9 parity, fl_server.py:79-80; `_` where the
+    *   reference writes `:`, which Hadoop parses as a URI scheme)
     * @param unweighted true = A2 aggregation, every client counts once
     *   (`np.mean`, fl_server_unsupervised.py:58-67 — the unsupervised
     *   server's rule); false = A1 example-count-weighted FedAvg
@@ -104,7 +82,6 @@ object Federation {
              graphId: String = "0",
              weightsDir: Option[String] = None,
              unweighted: Boolean = false,
-             agg: AggStrategy = AggStrategy.DriverFold,
              logger: GraftLogger = GraftLogger.stdout()): Result = {
     val sc = spark.sparkContext
     // counts buildClient invocations: growth past partitions.size means
@@ -116,94 +93,13 @@ object Federation {
       .map { p => builds.add(1L); (p.toString, buildClient(p)) }
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     clients.count() // materialize every client (bundle load) exactly once
-    var buildsSeen = builds.value
-    var global = initial
-    val history = Seq.newBuilder[RoundLog]
-    val t0 = System.nanoTime()
-    for (round <- 1 to rounds) {
-      val bc = sc.broadcast(global)
-      val updatesRdd = clients
-        .map { case (name, client) =>
-          client.setWeights(bc.value)
-          val before = client.evaluate()
-          val w = client.fit(epochs)
-          (name, client.numExamples, w, before)
-        }
-      val (combined, nClients, totalExamples, clientMetrics) =
-        combineRound(spark, updatesRdd, agg, unweighted)
-      global = combined
-      bc.destroy()
-      if (builds.value > buildsSeen) {
-        logger.info(s"WARNING: ${builds.value - buildsSeen} client(s) were " +
-          s"rebuilt in round $round (cache eviction) — optimizer state reset")
-        buildsSeen = builds.value
-      }
-      weightsDir.foreach { dir =>
-        WeightsIO.save(spark, global, s"$dir/weights_graphID:${graphId}_V$round")
-      }
-      val log = RoundLog(round, totalExamples, clientMetrics)
-      history += log
-      logger.info(s"Training cycle $round done; clients=$nClients, " +
-        s"examples=${log.totalExamples}")
-    }
-    val res = runFinalEval(sc, clients, global, history.result(), logger, t0, rounds)
-    res.copy(clientRebuilds = builds.value - partitions.size)
-  }
-
-  /** One round's combine, shared by `run` and `runScheduled`: reduce the
-    * per-client `(name, n_i, W_i, metrics)` RDD to the new global model
-    * under the chosen [[AggStrategy]], returning (global, nClients,
-    * totalExamples, perClientMetrics). The algebra is identical across
-    * strategies; they differ only in WHERE the weighted mean runs.
-    */
-  private def combineRound(spark: SparkSession,
-      updatesRdd: org.apache.spark.rdd.RDD[(String, Long, Weights, Map[String, Double])],
-      agg: AggStrategy, unweighted: Boolean)
-      : (Weights, Int, Long, Seq[(String, Map[String, Double])]) = agg match {
-    case AggStrategy.DriverFold =>
-      // reference topology: every (n_i, W_i) lands on the driver
-      val updates = updatesRdd.collect().toSeq
-      val global =
-        if (unweighted) FedAvg.mean(updates.map(_._3))
-        else FedAvg.weighted(updates.map(u => (u._2, u._3)))
-      (global, updates.size, updates.map(_._2).sum, updates.map(u => (u._1, u._4)))
-    case distributed =>
-      // scale topology: weights combine across executors; the
-      // driver collects only the (name, n, metrics) metadata.
-      // MEMORY_AND_DISK: eviction spills rather than re-running
-      // fit() (a re-run would advance optimizer state twice).
-      updatesRdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val weightedUpdates = updatesRdd
-        .map { case (_, n, w, _) => (if (unweighted) 1L else n, w) }
-      val global = distributed match {
-        case AggStrategy.TreeAggregate => FedAvg.weightedTree(weightedUpdates)
-        case _ =>
-          implicit val enc: org.apache.spark.sql.Encoder[(Long, Weights)] =
-            org.apache.spark.sql.Encoders.kryo[(Long, Weights)]
-          spark.createDataset(weightedUpdates)
-            .select(FedAvgAggregator.column).head()
-      }
-      val meta = updatesRdd
-        .map { case (name, n, _, before) => (name, n, before) }.collect().toSeq
-      updatesRdd.unpersist(blocking = false)
-      (global, meta.size, meta.map(_._2).sum, meta.map(m => (m._1, m._3)))
-  }
-
-  private def runFinalEval(sc: org.apache.spark.SparkContext,
-                           clients: org.apache.spark.rdd.RDD[(String, FedModel)],
-                           global: Weights, history: Seq[RoundLog],
-                           logger: GraftLogger, t0: Long, rounds: Int): Result = {
-    // on-STOP evaluation of the final global model (fl_client.py:129-142)
-    val bcFinal = sc.broadcast(global)
-    val finalMetrics = clients.map { case (name, client) =>
-      client.setWeights(bcFinal.value)
-      (name, client.evaluate())
-    }.collect().toSeq
-    bcFinal.destroy()
+    val res = federate(spark, clients, initial, rounds, epochs, graphId,
+      weightsDir, unweighted, logger)
     clients.unpersist(blocking = false)
-    logger.info(f"Federation finished: $rounds rounds in " +
-      f"${(System.nanoTime() - t0) / 1e9}%.1f s")
-    Result(global, history, finalMetrics)
+    val rebuilds = builds.value - partitions.size
+    if (rebuilds > 0) logger.info(s"WARNING: $rebuilds client(s) were " +
+      "rebuilt (cache eviction) — optimizer state reset")
+    res.copy(clientRebuilds = rebuilds)
   }
 
   /** §3.2 — the SCHEDULED variant (fl_client_shed.py:151-206 +
@@ -231,57 +127,61 @@ object Federation {
              epochs: Int,
              graphId: String = "0",
              weightsDir: Option[String] = None,
-             agg: AggStrategy = AggStrategy.DriverFold,
              logger: GraftLogger = GraftLogger.stdout()): Result = {
-    val sc = spark.sparkContext
     val groups = MemCost.pack(partitions, budgetGB)(cost)
     logger.info(s"scheduled federation: ${partitions.size} partitions in " +
       s"${groups.size} groups under $budgetGB GB")
+    // unpersisted: every pass over it (each round, the final eval)
+    // rebuilds the models; the lazy iterator keeps at most one
+    // partition's model alive per task at a time (the budget contract)
+    val clients = spark.sparkContext.parallelize(groups, groups.size)
+      .flatMap(_.iterator.map(p => (p.toString, buildClient(p))))
+    federate(spark, clients, initial, rounds, epochs, graphId, weightsDir,
+      unweighted = false, logger)
+  }
+
+  /** The round loop both entry points share: per round, broadcast the
+    * global weights → every client in `clients` sets them, evaluates
+    * and fits → collect the `(n_i, W_i)` updates and fold FedAvg on the
+    * driver → destroy the broadcast → checkpoint → `RoundLog`; then the
+    * on-STOP evaluation of the final global model (fl_client.py:129-142).
+    */
+  private def federate(spark: SparkSession,
+                       clients: org.apache.spark.rdd.RDD[(String, FedModel)],
+                       initial: Weights, rounds: Int, epochs: Int,
+                       graphId: String, weightsDir: Option[String],
+                       unweighted: Boolean, logger: GraftLogger): Result = {
+    val sc = spark.sparkContext
     var global = initial
     val history = Seq.newBuilder[RoundLog]
     val t0 = System.nanoTime()
     for (round <- 1 to rounds) {
       val bc = sc.broadcast(global)
-      val updatesRdd = sc.parallelize(groups, groups.size)
-        .flatMap { group =>
-          // sequential within the group — at most one partition's model
-          // alive at a time (the budget contract)
-          group.map { p =>
-            val client = buildClient(p)
-            client.setWeights(bc.value)
-            val before = client.evaluate()
-            val w = client.fit(epochs)
-            (p.toString, client.numExamples, w, before)
-          }
-        }
-      // FedAvg over the PER-PARTITION (n_p, W_p) pairs (fl_server_shed's
-      // accumulate loop), under the same strategy options as `run` —
-      // shed updates are small by construction, but the scheduled path
-      // should not be structurally barred from tree-combining.
-      val (combined, nParts, totalExamples, partMetrics) =
-        combineRound(spark, updatesRdd, agg, unweighted = false)
-      global = combined
+      val updates = clients.map { case (name, client) =>
+        client.setWeights(bc.value)
+        val before = client.evaluate()
+        val w = client.fit(epochs)
+        (name, client.numExamples, w, before)
+      }.collect().toSeq
+      global =
+        if (unweighted) FedAvg.mean(updates.map(_._3))
+        else FedAvg.weighted(updates.map(u => (u._2, u._3)))
       bc.destroy()
       weightsDir.foreach { dir =>
-        WeightsIO.save(spark, global, s"$dir/weights_graphID:${graphId}_V$round")
+        WeightsIO.save(spark, global, s"$dir/weights_graphID_${graphId}_V$round")
       }
-      val log = RoundLog(round, totalExamples, partMetrics)
+      val log = RoundLog(round, updates.map(_._2).sum, updates.map(u => (u._1, u._4)))
       history += log
-      logger.info(s"[shed] cycle $round done; partitions=$nParts, " +
+      logger.info(s"Training cycle $round done; clients=${updates.size}, " +
         s"examples=${log.totalExamples}")
     }
-    // final evaluation with fresh per-partition models (shed clients are
-    // rebuilt every pass by design)
     val bcFinal = sc.broadcast(global)
-    val finalMetrics = sc.parallelize(groups, groups.size)
-      .flatMap(_.map { p =>
-        val client = buildClient(p)
-        client.setWeights(bcFinal.value)
-        (p.toString, client.evaluate())
-      })
-      .collect().toSeq
+    val finalMetrics = clients.map { case (name, client) =>
+      client.setWeights(bcFinal.value)
+      (name, client.evaluate())
+    }.collect().toSeq
     bcFinal.destroy()
-    logger.info(f"[shed] federation finished: $rounds rounds in " +
+    logger.info(f"Federation finished: $rounds rounds in " +
       f"${(System.nanoTime() - t0) / 1e9}%.1f s")
     Result(global, history.result(), finalMetrics)
   }

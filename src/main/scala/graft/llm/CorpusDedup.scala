@@ -31,6 +31,8 @@ object CorpusDedup {
             threshold: Double = 0.8, shingleN: Int = 3,
             numHashes: Int = 64, bands: Int = 16,
             seed: Long = 42L): DataFrame = {
+    require(threshold > 0.0 && threshold <= 1.0,
+      s"threshold must be in (0, 1], got $threshold")
     // stage 1: exact content dedup, min id per hash class
     val keepExact = df
       .select(col(idCol), md5(col(textCol)).as("__h"))
@@ -73,6 +75,8 @@ object CorpusDedup {
                    threshold: Double = 0.8, shingleN: Int = 3,
                    numHashes: Int = 64, bands: Int = 16,
                    seed: Long = 42L): DataFrame = {
+    require(threshold > 0.0 && threshold <= 1.0,
+      s"threshold must be in (0, 1], got $threshold")
     // exact stage: batch keep-first, minus hashes the corpus already has
     val cHashes = corpus.select(md5(col(textCol)).as("__h")).distinct()
     val keptIds = batch

@@ -408,6 +408,8 @@ object NearDup {
                    threshold: Double = 0.8, shingleN: Int = 3,
                    numHashes: Int = 64, bands: Int = 16,
                    seed: Long = 42L): DataFrame = {
+    require(threshold > 0.0 && threshold <= 1.0,
+      s"threshold must be in (0, 1], got $threshold")
     require(numHashes % bands == 0,
       s"numHashes=$numHashes not divisible by bands=$bands")
     // tokenize ONCE for the WHOLE operator (r19; r18 had already

@@ -2,7 +2,7 @@ package graft.ml
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.graph.{EdgeSplitter, PropertyGraph}
@@ -46,16 +46,14 @@ object BundleIO {
   /** Split + persist one partition's training bundle; returns its ref.
     * Layout: `dir/name/{features,adjacency,train,test}/part-*` —
     * space-separated text: `id f…` / `id nbr…` / `src dst label`.
-    */
-  /** @param maxDegree adjacency cap per node (deterministic smallest
-    *   ids win) — REQUIRED at web-graph scale to bound hub-node array
-    *   size in both storage and trainer memory; unbounded for fixtures.
+    * The double split holds out 10% of edges as test, then 10% of the
+    * residual as train examples (the reference's two
+    * `EdgeSplitter.train_test_split(p=0.1)` calls).
     */
   def write(spark: SparkSession, dir: String, name: String, g: PropertyGraph,
-            testP: Double = 0.1, trainP: Double = 0.1,
-            seed: Long = 42L, maxDegree: Int = Int.MaxValue): BundleRef = {
-    val testSplit = EdgeSplitter.trainTestSplit(g, testP, seed)
-    val trainSplit = EdgeSplitter.trainTestSplit(testSplit.residual, trainP, seed + 1)
+            seed: Long = 42L): BundleRef = {
+    val testSplit = EdgeSplitter.trainTestSplit(g, 0.1, seed)
+    val trainSplit = EdgeSplitter.trainTestSplit(testSplit.residual, 0.1, seed + 1)
     val base = s"$dir/$name"
     // Every sub-table is written in CANONICAL (sorted) order: the
     // split's example SET is seeded-deterministic, but its row order
@@ -66,22 +64,12 @@ object BundleIO {
     // AUC run to run). A global sort pins it; range-partitioned sorted
     // part files concatenate to the total order however the partition
     // boundaries fall, at the cost of one bounded ETL-time shuffle.
-    g.nodes.orderBy("id")
-      .select(concat_ws(" ", col("id"), col("features").cast("array<string>")))
-      .write.mode("overwrite").text(s"$base/features")
-    trainSplit.residual.adjacency(maxDegree).orderBy("id")
-      .select(concat_ws(" ", col("id"), col("neighbors").cast("array<string>")))
-      .write.mode("overwrite").text(s"$base/adjacency")
-    trainSplit.examples.orderBy("source", "target", "label")
-      .select(concat_ws(" ", col("source"), col("target"), col("label")))
-      .write.mode("overwrite").text(s"$base/train")
-    testSplit.examples.orderBy("source", "target", "label")
-      .select(concat_ws(" ", col("source"), col("target"), col("label")))
-      .write.mode("overwrite").text(s"$base/test")
-    val nF = g.nodes.select(size(col("features"))).limit(1).collect()
-      .headOption.map(_.getInt(0)).getOrElse(0)
-    BundleRef(name, dir, nF,
-      new graft.util.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
+    writeGraph(g.nodes, trainSplit.residual.adjacency(), base)
+    writeLines(trainSplit.examples.orderBy("source", "target", "label"),
+      s"$base/train", col("source"), col("target"), col("label"))
+    writeLines(testSplit.examples.orderBy("source", "target", "label"),
+      s"$base/test", col("source"), col("target"), col("label"))
+    bundleRef(spark, g, dir, name)
   }
 
   /** Unsupervised bundle (distributed_nograd.py:19-34 shape): NO edge
@@ -95,25 +83,40 @@ object BundleIO {
                         g: PropertyGraph,
                         walkLength: Int = SageHyperParams.unsupervisedWalkLength,
                         nWalks: Int = SageHyperParams.unsupervisedNumWalks,
-                        seed: Long = 42L, maxDegree: Int = Int.MaxValue): BundleRef = {
+                        seed: Long = 42L): BundleRef = {
     val base = s"$dir/$name"
     // canonical (sorted) order throughout — see `write`: the loaded
     // row order feeds the trainer's seeded shuffle, so plan-internal
     // order drift is a training-dynamics change
-    g.nodes.orderBy("id")
-      .select(concat_ws(" ", col("id"), col("features").cast("array<string>")))
-      .write.mode("overwrite").text(s"$base/features")
-    g.adjacency(maxDegree).orderBy("id")
-      .select(concat_ws(" ", col("id"), col("neighbors").cast("array<string>")))
-      .write.mode("overwrite").text(s"$base/adjacency")
+    writeGraph(g.nodes, g.adjacency(), base)
     val pairs = graft.graph.RandomWalk.unsupervisedPairs(g, walkLength, nWalks, seed)
       .orderBy("target", "context", "label")
-      .select(concat_ws(" ", col("target"), col("context"), col("label")))
-    pairs.write.mode("overwrite").text(s"$base/train")
+    writeLines(pairs, s"$base/train", col("target"), col("context"), col("label"))
     // test stores the same pairs (the slot-filled single bundle format,
     // see scaladoc): a byte-level copy of the written directory, not a
     // second Spark write job — identical files, half the ETL cost
     copyDir(s"$base/train", s"$base/test", spark.sparkContext.hadoopConfiguration)
+    bundleRef(spark, g, dir, name)
+  }
+
+  /** The `features` and `adjacency` sub-tables both bundle kinds
+    * share, sorted by id.
+    */
+  private def writeGraph(nodes: DataFrame, adjacency: DataFrame, base: String): Unit = {
+    writeLines(nodes.orderBy("id"), s"$base/features",
+      col("id"), col("features").cast("array<string>"))
+    writeLines(adjacency.orderBy("id"), s"$base/adjacency",
+      col("id"), col("neighbors").cast("array<string>"))
+  }
+
+  /** One sub-table as space-separated text lines, overwriting `path`. */
+  private def writeLines(df: DataFrame, path: String, cols: Column*): Unit =
+    df.select(concat_ws(" ", cols: _*)).write.mode("overwrite").text(path)
+
+  /** The driver's handle on a written bundle: its feature width and
+    * the session's Hadoop conf.
+    */
+  private def bundleRef(spark: SparkSession, g: PropertyGraph, dir: String, name: String): BundleRef = {
     val nF = g.nodes.select(size(col("features"))).limit(1).collect()
       .headOption.map(_.getInt(0)).getOrElse(0)
     BundleRef(name, dir, nF,

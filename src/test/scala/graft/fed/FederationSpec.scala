@@ -43,6 +43,8 @@ class FederationSpec extends SparkSpec {
     assert(res.weights.head.values.toSeq === Seq(5.0f, 15.0f))
     assert(res.history.map(_.round) === Seq(1, 2))
     assert(res.history.head.totalExamples === 8L)
+    assert(res.history.head.clientMetrics.size === 2)
+    assert(res.finalMetrics.size === 2)
     // the cached clients must have survived the whole session: any
     // rebuild means optimizer state was silently reset mid-training
     assert(res.clientRebuilds === 0L)
@@ -70,33 +72,6 @@ class FederationSpec extends SparkSpec {
     assert(res.weights.head.values.toSeq === Seq(4.0f, 14.0f))
   }
 
-  test("TreeAggregate and SqlAggregator strategies reproduce the DriverFold trace") {
-    // same setup as the hand-computed trace: w -> w + 2.5 per round;
-    // the distributed paths must match bit-for-bit, and the round logs
-    // must still carry every client's metadata
-    for (strategy <- Seq(Federation.AggStrategy.TreeAggregate,
-                         Federation.AggStrategy.SqlAggregator)) {
-      val res = Federation.run(spark,
-        partitions = Seq(("a", 2L, 1f), ("b", 6L, 3f)),
-        buildClient = (p: (String, Long, Float)) => new ShiftModel(p._2, p._3),
-        initial = init, rounds = 2, epochs = 1, agg = strategy)
-      assert(res.weights.head.values.toSeq === Seq(5.0f, 15.0f), strategy)
-      assert(res.history.head.totalExamples === 8L, strategy)
-      assert(res.history.head.clientMetrics.size === 2, strategy)
-      assert(res.finalMetrics.size === 2, strategy)
-    }
-  }
-
-  test("unweighted A2 mean also works through the distributed strategies") {
-    // unweighted trace: w -> w + 2 per round (see A2 test above)
-    val res = Federation.run(spark,
-      partitions = Seq(("a", 2L, 1f), ("b", 6L, 3f)),
-      buildClient = (p: (String, Long, Float)) => new ShiftModel(p._2, p._3),
-      initial = init, rounds = 2, epochs = 1, unweighted = true,
-      agg = Federation.AggStrategy.SqlAggregator)
-    assert(res.weights.head.values.toSeq === Seq(4.0f, 14.0f))
-  }
-
   test("per-round weight checkpoints are written and loadable (S9 parity)") {
     val dir = java.nio.file.Files.createTempDirectory("fed-w").toString
     Federation.run(spark,
@@ -104,10 +79,24 @@ class FederationSpec extends SparkSpec {
       buildClient = (p: (String, Long, Float)) => new ShiftModel(p._2, p._3),
       initial = init, rounds = 3, epochs = 1,
       graphId = "4", weightsDir = Some(dir))
-    val r2 = WeightsIO.load(spark, s"$dir/weights_graphID:4_V2")
+    val r2 = WeightsIO.load(spark, s"$dir/weights_graphID_4_V2")
     assert(r2.head.values.toSeq === Seq(2.0f, 12.0f))
-    val r3 = WeightsIO.load(spark, s"$dir/weights_graphID:4_V3")
+    val r3 = WeightsIO.load(spark, s"$dir/weights_graphID_4_V3")
     assert(r3.head.values.toSeq === Seq(3.0f, 13.0f))
+  }
+
+  test("a re-run into an existing weightsDir overwrites its checkpoints") {
+    val dir = java.nio.file.Files.createTempDirectory("fed-rerun").toString
+    def session(): Federation.Result = Federation.run(spark,
+      partitions = Seq(("a", 2L, 1f), ("b", 6L, 3f)),
+      buildClient = (p: (String, Long, Float)) => new ShiftModel(p._2, p._3),
+      initial = init, rounds = 2, epochs = 1,
+      graphId = "4", weightsDir = Some(dir))
+    session()
+    val again = session()
+    val v2 = WeightsIO.load(spark, s"$dir/weights_graphID_4_V2")
+    assert(v2.head.values.toSeq === Seq(5.0f, 15.0f))
+    assert(v2.head.values.toSeq === again.weights.head.values.toSeq)
   }
 
   test("memory cost model matches mem.py example estimates (A5)") {

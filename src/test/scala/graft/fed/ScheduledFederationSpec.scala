@@ -34,6 +34,7 @@ class ScheduledFederationSpec extends SparkSpec {
         Set("(p0,1,1.0)", "(p1,3,2.0)", "(p2,2,3.0)", "(p3,2,4.0)"))
       assert(log.totalExamples === 8L)
     }
+    assert(res.finalMetrics.size === 4)
   }
 
   test("scheduled and flat federation agree on the global weights") {
@@ -47,26 +48,6 @@ class ScheduledFederationSpec extends SparkSpec {
     assert(flat.weights.head.values.toSeq === shed.weights.head.values.toSeq)
   }
 
-  test("scheduled combine strategies agree: DriverFold = TreeAggregate = SqlAggregator") {
-    // same algebra regardless of WHERE the weighted mean runs — the
-    // scheduled loop now takes the same AggStrategy options as `run`
-    val byStrategy = Seq(Federation.AggStrategy.DriverFold,
-      Federation.AggStrategy.TreeAggregate,
-      Federation.AggStrategy.SqlAggregator).map { strat =>
-      Federation.runScheduled(spark, parts,
-        cost = (_: (String, Long, Float)) => 2.0, budgetGB = 4.5,
-        buildClient = (p: (String, Long, Float)) => new ShiftModel(p._2, p._3),
-        initial = init, rounds = 2, epochs = 1, agg = strat)
-    }
-    val expected = Seq(0f + 2 * 21f / 8, 10f + 2 * 21f / 8)
-    byStrategy.foreach { res =>
-      assert(res.weights.head.values.toSeq === expected)
-      // per-partition metadata still reported under distributed combine
-      assert(res.history.head.clientMetrics.size === 4)
-      assert(res.history.head.totalExamples === 8L)
-    }
-  }
-
   test("scheduled CORA session: mem.py-costed groups train end to end") {
     val outDir = java.nio.file.Files.createTempDirectory("shed-cora").toString
     // CORA partitions cost ~2.06 GB each (mem.py example); budget 5 GB
@@ -77,7 +58,7 @@ class ScheduledFederationSpec extends SparkSpec {
     assert(res.history.head.clientMetrics.size === 2) // per-partition FedAvg inputs
     assert(res.history.head.totalExamples > 600)
     assert(res.finalMetrics.forall(_._2.contains("test_auc")))
-    val w1 = graft.sources.WeightsIO.load(spark, s"$outDir/weights/weights_graphID:4_V1")
+    val w1 = graft.sources.WeightsIO.load(spark, s"$outDir/weights/weights_graphID_4_V1")
     assert(w1.nonEmpty)
   }
 

@@ -26,6 +26,9 @@ class CorpusDedupSpec extends SparkSpec {
     // 11 drops (exact dup of 1), 5 drops (exact dup of 3),
     // 2 drops (near-dup of 1), groups keep min ids 1 and 3, 4 survives
     assert(kept === Set(1L, 3L, 4L))
+    for (bad <- Seq(0.0, 1.5))
+      intercept[IllegalArgumentException](
+        CorpusDedup.clean(docs, "doc_id", "text", threshold = bad))
   }
 
   test("decontaminate: only docs sharing an n-gram run with the benchmark are flagged") {
@@ -175,6 +178,9 @@ class CorpusDedupSpec extends SparkSpec {
         threshold = 0.6)
       .select("doc_id").as[Long].collect().toSet
     assert(kept === full.filter(_ >= 10L))
+    for (bad <- Seq(0.0, 1.5))
+      intercept[IllegalArgumentException](
+        CorpusDedup.cleanAgainst(corpus, batch, "doc_id", "text", threshold = bad))
   }
 
   test("dedupParagraphs plan: no cartesian product, no single-partition stage") {

@@ -49,6 +49,10 @@ class NearDupSpec extends SparkSpec {
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     // verification makes precision exact; recall must cover the oracle
     assert(lsh === exact, s"LSH ${lsh.size} pairs vs exact ${exact.size}")
+    // the zero-shingle pre-filter is output-neutral only for threshold > 0
+    for (bad <- Seq(0.0, 1.5))
+      intercept[IllegalArgumentException](
+        NearDup.nearDupPairs(df, "doc_id", "text", threshold = bad))
     df.unpersist()
   }
 

@@ -48,7 +48,7 @@ class BundleDeterminismSpec extends SparkSpec {
     val g = fixtureGraph()
     val hashes = (1 to 2).map { i =>
       val out = java.nio.file.Files.createTempDirectory(s"bdet$i").toString
-      BundleIO.write(spark, out, "g", g, testP = 0.1, trainP = 0.1)
+      BundleIO.write(spark, out, "g", g)
       hashBundle(s"$out/g")
     }
     assert(hashes(0).keySet === Set("features", "adjacency", "train", "test"))

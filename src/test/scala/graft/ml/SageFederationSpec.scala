@@ -23,8 +23,8 @@ class SageFederationSpec extends SparkSpec {
 
   test("global weights change round over round") {
     val w3 = session.result.weights // materialize the lazy session first
-    val w1 = WeightsIO.load(spark, s"$outDir/weights/weights_graphID:4_V1")
-    val w2 = WeightsIO.load(spark, s"$outDir/weights/weights_graphID:4_V2")
+    val w1 = WeightsIO.load(spark, s"$outDir/weights/weights_graphID_4_V1")
+    val w2 = WeightsIO.load(spark, s"$outDir/weights/weights_graphID_4_V2")
     def flat(w: graft.fed.FedAvg.Weights): Seq[Float] = w.flatMap(_.values.toSeq)
     assert(flat(w1) !== flat(w2))
     assert(flat(w2) !== flat(w3))
@@ -56,7 +56,7 @@ class SageFederationSpec extends SparkSpec {
   }
 
   test("per-round checkpoints load and the last equals the returned weights") {
-    val last = WeightsIO.load(spark, s"$outDir/weights/weights_graphID:4_V$rounds")
+    val last = WeightsIO.load(spark, s"$outDir/weights/weights_graphID_4_V$rounds")
     val got = session.result.weights
     last.zip(got).foreach { case (a, b) =>
       assert(a.shape === b.shape)

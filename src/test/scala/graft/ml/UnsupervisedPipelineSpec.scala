@@ -72,8 +72,8 @@ class UnsupervisedPipelineSpec extends SparkSpec {
     parts.foreach(_._2.unpersist())
     assert(fedRes.history.map(_.round) === Seq(1, 2))
     // A2 rounds actually averaged: per-round checkpoints exist and differ
-    val w1 = graft.sources.WeightsIO.load(spark, s"$fedDir/weights/weights_graphID:4_V1")
-    val w2 = graft.sources.WeightsIO.load(spark, s"$fedDir/weights/weights_graphID:4_V2")
+    val w1 = graft.sources.WeightsIO.load(spark, s"$fedDir/weights/weights_graphID_4_V1")
+    val w2 = graft.sources.WeightsIO.load(spark, s"$fedDir/weights/weights_graphID_4_V2")
     assert(w1.flatMap(_.values.toSeq) !== w2.flatMap(_.values.toSeq))
     // per-partition artifacts exist with the S8 layout; concat dedups
     // shared cut-edge nodes (each client embeds them under its own local
