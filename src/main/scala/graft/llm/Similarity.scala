@@ -444,6 +444,9 @@ object Similarity {
     * large to broadcast folds in as ascending-id chunks, each merged
     * into the decision state before the next — exact, because the
     * drop rule references corpus ids and SMALLER batch ids only.
+    * As in [[semDedupClustered]], the call itself runs a Spark job on
+    * `centroids` (`foldedCentroids`' non-empty check), and an uncached
+    * centroid plan is evaluated twice.
     * Returns (vec_id, cluster_id, keep) for the batch ids.
     */
   def semDedupAppend(batch: DataFrame, corpusAsg: DataFrame,
@@ -768,6 +771,10 @@ object Similarity {
     * map-side (ids only move); the within-cluster pair scan reuses the
     * triangle-blocked device (no one-task-per-cluster sort, no global
     * pairing — the plan pairs per (cluster, block, block) key).
+    * Building the plan is eager: `foldedCentroids`' non-empty check
+    * runs a Spark job on `centroids` when this is called, and an
+    * uncached centroid plan is evaluated twice (that probe, then the
+    * fold itself) — cache an expensive centroid table first.
     * Returns (vec_id, cluster_id, keep).
     */
   def semDedupClustered(df: DataFrame, centroids: DataFrame, tau: Double,

@@ -11,13 +11,14 @@ import graft.graph.{EdgeSplitter, PropertyGraph}
   * partition's data.
   *
   * `write` runs the double edge split and DISTRIBUTED Spark text writes
-  * of features / adjacency / train / test under `dir/name/` — the only
-  * thing that returns to the driver is a `BundleRef` (paths + feature
-  * count). `load` runs INSIDE an executor task (plain Hadoop FS reads,
-  * no SparkSession) and builds the in-memory `PartitionBundle` the
-  * trainer owns — the same topology as the reference, where each client
-  * process reads its own partition's CSVs locally
-  * (fl_client.py:194-208).
+  * of features / adjacency / train / test under `dir/name/`;
+  * `writeUnsupervised` writes features / adjacency plus the walk spec,
+  * and the client samples its pair corpus when it loads. The only thing
+  * that returns to the driver is a `BundleRef` (paths + feature count).
+  * `load` runs INSIDE an executor task (plain Hadoop FS reads, no
+  * SparkSession) and builds the in-memory `PartitionBundle` the trainer
+  * owns — the same topology as the reference, where each client process
+  * reads its own partition's CSVs locally (fl_client.py:194-208).
   *
   * Scale: each sub-table is a partitioned text directory (no
   * coalesce-to-1); a bundle is one graph PARTITION, sized to fit one
@@ -55,6 +56,7 @@ object BundleIO {
     val testSplit = EdgeSplitter.trainTestSplit(g, 0.1, seed)
     val trainSplit = EdgeSplitter.trainTestSplit(testSplit.residual, 0.1, seed + 1)
     val base = s"$dir/$name"
+    delete(base, Seq(WalkFile), spark.sparkContext.hadoopConfiguration)
     // Every sub-table is written in CANONICAL (sorted) order: the
     // split's example SET is seeded-deterministic, but its row order
     // reflects plan internals (partition boundaries, aggregate
@@ -73,11 +75,14 @@ object BundleIO {
   }
 
   /** Unsupervised bundle (distributed_nograd.py:19-34 shape): NO edge
-    * split — the full graph's adjacency is the sampling structure, and
-    * the training set is the walk-co-occurrence pair corpus
-    * (UnsupervisedSampler parity via RandomWalk.unsupervisedPairs).
-    * `test` stores the same pairs (the nograd pipeline never evaluates;
-    * keeping the slot filled keeps one bundle format).
+    * split — the full graph's adjacency is the sampling structure.
+    * Layout: `dir/name/{features,adjacency}/part-*` plus `walk`, one
+    * line `length nWalks seed`. The walk-co-occurrence pair corpus is
+    * not stored: `load` samples it from the loaded adjacency
+    * (`RandomWalk.localPairs`, row for row the pairs
+    * `RandomWalk.unsupervisedPairs` draws), as each reference client
+    * runs `UnsupervisedSampler` over its own partition
+    * (models/unsupervised.py:43-46).
     */
   def writeUnsupervised(spark: SparkSession, dir: String, name: String,
                         g: PropertyGraph,
@@ -85,19 +90,31 @@ object BundleIO {
                         nWalks: Int = SageHyperParams.unsupervisedNumWalks,
                         seed: Long = 42L): BundleRef = {
     val base = s"$dir/$name"
+    val conf = spark.sparkContext.hadoopConfiguration
+    delete(base, Seq("train", "test"), conf)
     // canonical (sorted) order throughout — see `write`: the loaded
     // row order feeds the trainer's seeded shuffle, so plan-internal
     // order drift is a training-dynamics change
     writeGraph(g.nodes, g.adjacency(), base)
-    val pairs = graft.graph.RandomWalk.unsupervisedPairs(g, walkLength, nWalks, seed)
-      .orderBy("target", "context", "label")
-    writeLines(pairs, s"$base/train", col("target"), col("context"), col("label"))
-    // test stores the same pairs (the slot-filled single bundle format,
-    // see scaladoc): a byte-level copy of the written directory, not a
-    // second Spark write job — identical files, half the ETL cost
-    copyDir(s"$base/train", s"$base/test", spark.sparkContext.hadoopConfiguration)
+    val walk = new Path(s"$base/$WalkFile")
+    val out = walk.getFileSystem(conf).create(walk, true)
+    try out.write(s"$walkLength $nWalks $seed\n".getBytes("UTF-8"))
+    finally out.close()
     bundleRef(spark, g, dir, name)
   }
+
+  /** The walk spec file of an unsupervised bundle. */
+  private val WalkFile = "walk"
+
+  /** Delete the other bundle kind's entries an earlier write under the
+    * same name left behind: `load` tells the kinds apart by the walk
+    * file, so a stale one would turn a supervised bundle unsupervised.
+    */
+  private def delete(base: String, entries: Seq[String], conf: Configuration): Unit =
+    entries.foreach { e =>
+      val p = new Path(s"$base/$e")
+      p.getFileSystem(conf).delete(p, true)
+    }
 
   /** The `features` and `adjacency` sub-tables both bundle kinds
     * share, sorted by id.
@@ -124,7 +141,10 @@ object BundleIO {
   }
 
   /** Task-side bundle load: plain Hadoop FS, no Spark — resolved with
-    * the driver's Hadoop conf carried by the ref.
+    * the driver's Hadoop conf carried by the ref. An unsupervised
+    * bundle's pair corpus is sampled here, and one array serves as both
+    * train and test (the nograd pipeline never evaluates; keeping both
+    * slots filled keeps one `PartitionBundle` shape).
     */
   def load(ref: BundleRef): PartitionBundle = {
     val base = s"${ref.dir}/${ref.name}"
@@ -142,18 +162,18 @@ object BundleIO {
         val t = line.split(' ')
         (t(0).toLong, t(1).toLong, t(2).toInt)
       }.toArray
-    PartitionBundle(ref.name, features, adjacency,
-      examples("train"), examples("test"), ref.numFeatures)
-  }
-
-  /** Recursive overwrite copy via the Hadoop FS API (works for any
-    * Hadoop-compatible storage, same as the writes above).
-    */
-  private def copyDir(src: String, dst: String, conf: Configuration): Unit = {
-    val from = new Path(src); val to = new Path(dst)
-    val fs = FileSystem.get(from.toUri, conf)
-    if (fs.exists(to)) fs.delete(to, true)
-    org.apache.hadoop.fs.FileUtil.copy(fs, from, fs, to, false, conf): Unit
+    val walk = new Path(s"$base/$WalkFile")
+    val fs = walk.getFileSystem(conf)
+    val (train, test) =
+      if (fs.exists(walk)) {
+        val in = fs.open(walk)
+        val spec = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.split(' ')
+        finally in.close()
+        val pairs = graft.graph.RandomWalk.localPairs(features.keys, adjacency,
+          spec(0).toInt, spec(1).toInt, spec(2).toLong)
+        (pairs, pairs)
+      } else (examples("train"), examples("test"))
+    PartitionBundle(ref.name, features, adjacency, train, test, ref.numFeatures)
   }
 
   private def readLines(dirPath: String, conf: Configuration): Iterator[String] = {

@@ -666,6 +666,17 @@ final class LocalGraphSage(
     }
   }
 
+  /** Training RNG: ONE stream per client lifetime, advancing across
+    * federation rounds like the reference's long-lived Keras clients.
+    * The pre-round-18 per-fit() reseed replayed the identical shuffle
+    * order, neighbor samples and dropout masks EVERY round — features
+    * masked in round 1 stayed masked in every round, quietly degrading
+    * dropout. Still run-to-run deterministic: each client owns its
+    * stream (scheduling order can't touch it), so rep-to-rep AUC
+    * bit-identity holds; the recorded parity VALUE moves once.
+    */
+  @transient private lazy val fitRng = new java.util.Random(hp.seed)
+
   /** G8 — fit for `epochs` over the labeled link examples; returns the
     * mean loss per epoch. Shuffling and sampling are seeded.
     *
@@ -678,17 +689,6 @@ final class LocalGraphSage(
     * is identical to the serial loop. Losses and updates are unchanged
     * math on unchanged inputs: bit-identical, wall-clock shorter.
     */
-  /** Training RNG: ONE stream per client lifetime, advancing across
-    * federation rounds like the reference's long-lived Keras clients.
-    * The pre-round-18 per-fit() reseed replayed the identical shuffle
-    * order, neighbor samples and dropout masks EVERY round — features
-    * masked in round 1 stayed masked in every round, quietly degrading
-    * dropout. Still run-to-run deterministic: each client owns its
-    * stream (scheduling order can't touch it), so rep-to-rep AUC
-    * bit-identity holds; the recorded parity VALUE moves once.
-    */
-  @transient private lazy val fitRng = new java.util.Random(hp.seed)
-
   def fit(examples: Array[(Long, Long, Int)], epochs: Int): Seq[Double] = {
     val rng = fitRng
     implicit val ec: scala.concurrent.ExecutionContext =
@@ -720,33 +720,20 @@ final class LocalGraphSage(
           }
           (prepareBatch(roots, rng, train = true), idxs.map(i => examples(i)._3))
         }
-        val profile = sys.env.contains("GRAFT_SAGE_PROFILE")
-        var tAwait = 0L; var tFwd = 0L; var tBwd = 0L; var tAdam = 0L
         var next = scala.concurrent.Future(prep(batches(0)))
         var t = 0
         while (t < batches.length) {
-          val t0 = if (profile) System.nanoTime() else 0L
           val (bi, lab) = scala.concurrent.Await.result(next,
             scala.concurrent.duration.Duration.Inf)
           if (t + 1 < batches.length) next = scala.concurrent.Future(prep(batches(t + 1)))
-          val t1 = if (profile) System.nanoTime() else 0L
           val (bc, loss, dEmbU) = pairForwardPrepared(bi, lab)
-          val t2 = if (profile) System.nanoTime() else 0L
           val g = new Grads
           backwardBatch(bc, dEmbU, g)
-          val t3 = if (profile) System.nanoTime() else 0L
           adamStep(g)
-          if (profile) {
-            val t4 = System.nanoTime()
-            tAwait += t1 - t0; tFwd += t2 - t1; tBwd += t3 - t2; tAdam += t4 - t3
-          }
           lossSum += loss / lab.length
           nBatches += 1
           t += 1
         }
-        if (profile) println(
-          f"[sage-profile] ${batches.length} batches: await ${tAwait / 1e9}%.2f s, " +
-            f"fwd ${tFwd / 1e9}%.2f s, bwd ${tBwd / 1e9}%.2f s, adam ${tAdam / 1e9}%.2f s")
       }
       lossSum / math.max(nBatches, 1)
     }

@@ -23,17 +23,17 @@ import graft.sources.{GraftLogger, GraphIO}
   * keep-first-dedup the per-partition tables.
   *
   * Execution shape: one Spark task per partition — the task loads its
-  * bundle (data-local), trains, and EMITS the embedding rows as RDD
-  * output; embeddings flow task → CSV sink as a DataFrame, never
-  * through a driver collect. Weights (KB–MB) are the only thing the
-  * driver holds.
+  * bundle (data-local), samples its walk-pair corpus from it, trains,
+  * and writes its own embeddings CSV straight from the task; rows never
+  * pass through a DataFrame or a driver collect. Weights (KB–MB) are
+  * the only thing the driver holds.
   */
 object UnsupervisedPipeline {
 
-  /** Per-partition unsupervised bundles (walk pairs as the train set).
-    * Partitions are independent and bundle writes are order-canonical,
-    * so their walk-corpus jobs submit concurrently from driver threads
-    * (same rationale as FedTrain's ETL).
+  /** Per-partition unsupervised bundles (graph + walk spec; the client
+    * samples its pairs at load). Partitions are independent and bundle
+    * writes are order-canonical, so their write jobs submit concurrently
+    * from driver threads (same rationale as FedTrain's ETL).
     */
   private def writeBundles(spark: SparkSession, parts: Seq[(String, PropertyGraph)],
                            graphId: String, outDir: String, hp: SageHyperParams,

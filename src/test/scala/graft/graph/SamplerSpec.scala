@@ -11,6 +11,21 @@ class SamplerSpec extends SparkSpec {
     Seq(1L, 2L, 3L, 4L, 9L).map(i => (i, Seq(i.toFloat))).toDF("id", "features"),
     Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("source", "target"))
 
+  // star: hub 0 has degree 10, leaves 1..10 degree 1
+  private def star = PropertyGraph(
+    (0L to 10L).map(i => (i, Seq(i.toFloat))).toDF("id", "features"),
+    (1L to 10L).map(i => (0L, i)).toDF("source", "target"))
+
+  // star plus isolated node 11
+  private def withIsolated = PropertyGraph(
+    (0L to 11L).map(i => (i, Seq(i.toFloat))).toDF("id", "features"),
+    (1L to 10L).map(i => (0L, i)).toDF("source", "target"))
+
+  // self-loop on 2 and a parallel 3-4 edge: repeated neighbours
+  private def loopy = PropertyGraph(
+    Seq(1L, 2L, 3L, 4L, 5L).map(i => (i, Seq(i.toFloat))).toDF("id", "features"),
+    Seq((1L, 2L), (2L, 2L), (2L, 3L), (3L, 4L), (4L, 3L), (4L, 5L)).toDF("source", "target"))
+
   test("sampleNeighbors: samples come from the true neighbor set, exactly k, with replacement") {
     val input = Seq((100L, 2L), (101L, 2L)).toDF("example_id", "node")
     val out = NeighborSampler.sampleNeighbors(input, "node", "example_id",
@@ -94,12 +109,9 @@ class SamplerSpec extends SparkSpec {
   }
 
   test("negative sampling follows the degree^0.75 distribution (hub oversampled)") {
-    // star: hub 0 has degree 10, leaves degree 1 → hub weight 10^.75≈5.6
-    // of total ≈15.6 → hub ≈36% of table rows; uniform would give 1/11
-    val star = PropertyGraph(
-      (0L to 10L).map(i => (i, Seq(i.toFloat))).toDF("id", "features"),
-      (1L to 10L).map(i => (0L, i)).toDF("source", "target"))
-    val table = RandomWalk.negativeTable(star, 0.75)
+    // hub weight 10^.75≈5.6 of total ≈15.6 → hub ≈36% of table rows;
+    // uniform would give 1/11
+    val table = RandomWalk.negativeTable(star)
     val counts = table.groupBy("context").count()
       .as[(Long, Long)].collect().toMap
     val total = counts.values.sum.toDouble
@@ -108,10 +120,7 @@ class SamplerSpec extends SparkSpec {
     // leaves all present with equal copies
     (1L to 10L).foreach(i => assert(counts.contains(i)))
     // isolated nodes never sampled under smoothing
-    val withIsolated = PropertyGraph(
-      (0L to 11L).map(i => (i, Seq(i.toFloat))).toDF("id", "features"),
-      (1L to 10L).map(i => (0L, i)).toDF("source", "target"))
-    assert(!RandomWalk.negativeTable(withIsolated, 0.75)
+    assert(!RandomWalk.negativeTable(withIsolated)
       .filter(col("context") === 11L).head(1).nonEmpty)
   }
 
@@ -127,6 +136,20 @@ class SamplerSpec extends SparkSpec {
       3L -> Set(1L, 2L, 4L, 3L), 4L -> Set(2L, 3L, 4L))
     pos.select("target", "context").as[(Long, Long)].collect().foreach {
       case (t, c) => assert(within2(t).contains(c), s"pair $t-$c")
+    }
+  }
+
+  test("localPairs: the in-memory sampler reproduces unsupervisedPairs row for row") {
+    val graphs = Seq("path" -> path, "star" -> star, "withIsolated" -> withIsolated,
+      "loopy" -> loopy)
+    for ((name, g) <- graphs; ((length, nWalks), i) <- Seq((1, 1), (3, 2), (5, 1), (4, 3)).zipWithIndex) {
+      val seed = 5L + i
+      val expected = RandomWalk.unsupervisedPairs(g, length, nWalks, seed)
+        .orderBy("target", "context", "label").as[(Long, Long, Int)].collect()
+      val adjacency = g.adjacency().as[(Long, Array[Long])].collect().toMap
+      val got = RandomWalk.localPairs(g.nodeIds.as[Long].collect(), adjacency,
+        length, nWalks, seed)
+      assert(got.toSeq === expected.toSeq, s"$name, length $length, nWalks $nWalks")
     }
   }
 }

@@ -3,7 +3,8 @@ package graft.ml
 import java.security.MessageDigest
 
 import graft.SparkSpec
-import graft.graph.PropertyGraph
+import graft.graph.{PropertyGraph, RandomWalk}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 /** Bundles must be BYTE-deterministic across runs: the trainer's seeded
@@ -57,15 +58,47 @@ class BundleDeterminismSpec extends SparkSpec {
     }
   }
 
+  // two independent unsupervised writes of the fixture: (dir, ref)
+  private lazy val unsupervisedRuns = (1 to 2).map { i =>
+    val out = java.nio.file.Files.createTempDirectory(s"bdetu$i").toString
+    out -> BundleIO.writeUnsupervised(spark, out, "g", fixtureGraph())
+  }
+
   test("unsupervised bundle writes are byte-identical across runs") {
-    val g = fixtureGraph()
-    val hashes = (1 to 2).map { i =>
-      val out = java.nio.file.Files.createTempDirectory(s"bdetu$i").toString
-      BundleIO.writeUnsupervised(spark, out, "g", g)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val hashes = unsupervisedRuns.map { case (out, _) =>
+      val base = new Path(s"$out/g")
+      val entries = base.getFileSystem(conf).listStatus(base).map(_.getPath.getName).toSet
+      assert(entries === Set("features", "adjacency", "walk"))
       hashBundle(s"$out/g")
     }
     hashes(0).foreach { case (sub, h) =>
       assert(hashes(1)(sub) === h, s"$sub bytes differ between runs")
     }
+  }
+
+  test("unsupervised bundles load the Spark sampler's walk pairs as train and test") {
+    val Seq(a, b) = unsupervisedRuns.map { case (_, ref) => BundleIO.load(ref) }
+    assert(a.trainExamples.toSeq === b.trainExamples.toSeq)
+    assert(a.trainExamples eq a.testExamples)
+    val expected = RandomWalk.unsupervisedPairs(fixtureGraph(),
+        SageHyperParams.unsupervisedWalkLength, SageHyperParams.unsupervisedNumWalks, 42L)
+      .orderBy("target", "context", "label").as[(Long, Long, Int)].collect().toSeq
+    assert(a.trainExamples.toSeq === expected)
+    // a ref built by hand (no carried Hadoop conf) loads the same pairs
+    val byHand = BundleIO.load(BundleIO.BundleRef("g", unsupervisedRuns.head._1, 12))
+    assert(byHand.trainExamples.toSeq === expected)
+  }
+
+  test("a supervised write over an unsupervised bundle loads as supervised") {
+    val out = java.nio.file.Files.createTempDirectory("bdetx").toString
+    BundleIO.writeUnsupervised(spark, out, "g", fixtureGraph())
+    val b = BundleIO.load(BundleIO.write(spark, out, "g", fixtureGraph()))
+    val base = new Path(s"$out/g")
+    val entries = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(base).map(_.getPath.getName).toSet
+    assert(entries === Set("features", "adjacency", "train", "test"))
+    assert(b.trainExamples.nonEmpty && b.testExamples.nonEmpty)
+    assert(!(b.trainExamples eq b.testExamples))
   }
 }
