@@ -72,17 +72,24 @@ object Federation {
     * @param unweighted true = A2 aggregation, every client counts once
     *   (`np.mean`, fl_server_unsupervised.py:58-67 — the unsupervised
     *   server's rule); false = A1 example-count-weighted FedAvg
+    * @param onStop the client's on-STOP step after its final evaluate:
+    *   it runs in the same task of the final pass, on the persisted
+    *   client that holds the final global weights, and receives the
+    *   client as `buildClient` typed it. The unsupervised client embeds
+    *   its nodes and writes its CSV there
+    *   (fl_client_unsupervised.py:117-122). No-op by default.
     */
-  def run[P: scala.reflect.ClassTag](spark: SparkSession,
+  def run[P: scala.reflect.ClassTag, M <: FedModel](spark: SparkSession,
              partitions: Seq[P],
-             buildClient: P => FedModel,
+             buildClient: P => M,
              initial: Weights,
              rounds: Int,
              epochs: Int,
              graphId: String = "0",
              weightsDir: Option[String] = None,
              unweighted: Boolean = false,
-             logger: GraftLogger = GraftLogger.stdout()): Result = {
+             logger: GraftLogger = GraftLogger.stdout(),
+             onStop: (P, M) => Unit = (_: P, _: M) => ()): Result = {
     val sc = spark.sparkContext
     // counts buildClient invocations: growth past partitions.size means
     // Spark evicted a cached client and rebuilt it with fresh optimizer
@@ -90,11 +97,11 @@ object Federation {
     // contract degraded; surface it instead of absorbing it silently
     val builds = sc.longAccumulator("graft.clientBuilds")
     val clients = sc.parallelize(partitions, partitions.size)
-      .map { p => builds.add(1L); (p.toString, buildClient(p)) }
+      .map { p => builds.add(1L); (p, buildClient(p)) }
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     clients.count() // materialize every client (bundle load) exactly once
     val res = federate(spark, clients, initial, rounds, epochs, graphId,
-      weightsDir, unweighted, logger)
+      weightsDir, unweighted, logger, onStop)
     clients.unpersist(blocking = false)
     val rebuilds = builds.value - partitions.size
     if (rebuilds > 0) logger.info(s"WARNING: $rebuilds client(s) were " +
@@ -135,33 +142,36 @@ object Federation {
     // rebuilds the models; the lazy iterator keeps at most one
     // partition's model alive per task at a time (the budget contract)
     val clients = spark.sparkContext.parallelize(groups, groups.size)
-      .flatMap(_.iterator.map(p => (p.toString, buildClient(p))))
+      .flatMap(_.iterator.map(p => (p, buildClient(p))))
     federate(spark, clients, initial, rounds, epochs, graphId, weightsDir,
-      unweighted = false, logger)
+      unweighted = false, logger, (_: P, _: FedModel) => ())
   }
 
   /** The round loop both entry points share: per round, broadcast the
     * global weights → every client in `clients` sets them, evaluates
     * and fits → collect the `(n_i, W_i)` updates and fold FedAvg on the
     * driver → destroy the broadcast → checkpoint → `RoundLog`; then the
-    * on-STOP evaluation of the final global model (fl_client.py:129-142).
+    * on-STOP pass of the final global model: every client evaluates it
+    * (fl_client.py:129-142) and runs `onStop` in the same task.
+    * Clients report under `p.toString`.
     */
-  private def federate(spark: SparkSession,
-                       clients: org.apache.spark.rdd.RDD[(String, FedModel)],
+  private def federate[P, M <: FedModel](spark: SparkSession,
+                       clients: org.apache.spark.rdd.RDD[(P, M)],
                        initial: Weights, rounds: Int, epochs: Int,
                        graphId: String, weightsDir: Option[String],
-                       unweighted: Boolean, logger: GraftLogger): Result = {
+                       unweighted: Boolean, logger: GraftLogger,
+                       onStop: (P, M) => Unit): Result = {
     val sc = spark.sparkContext
     var global = initial
     val history = Seq.newBuilder[RoundLog]
     val t0 = System.nanoTime()
     for (round <- 1 to rounds) {
       val bc = sc.broadcast(global)
-      val updates = clients.map { case (name, client) =>
+      val updates = clients.map { case (p, client) =>
         client.setWeights(bc.value)
         val before = client.evaluate()
         val w = client.fit(epochs)
-        (name, client.numExamples, w, before)
+        (p.toString, client.numExamples, w, before)
       }.collect().toSeq
       global =
         if (unweighted) FedAvg.mean(updates.map(_._3))
@@ -176,9 +186,11 @@ object Federation {
         s"examples=${log.totalExamples}")
     }
     val bcFinal = sc.broadcast(global)
-    val finalMetrics = clients.map { case (name, client) =>
+    val finalMetrics = clients.map { case (p, client) =>
       client.setWeights(bcFinal.value)
-      (name, client.evaluate())
+      val metrics = client.evaluate()
+      onStop(p, client)
+      (p.toString, metrics)
     }.collect().toSeq
     bcFinal.destroy()
     logger.info(f"Federation finished: $rounds rounds in " +

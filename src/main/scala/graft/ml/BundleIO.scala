@@ -71,7 +71,7 @@ object BundleIO {
       s"$base/train", col("source"), col("target"), col("label"))
     writeLines(testSplit.examples.orderBy("source", "target", "label"),
       s"$base/test", col("source"), col("target"), col("label"))
-    bundleRef(spark, g, dir, name)
+    bundleRef(spark, dir, name)
   }
 
   /** Unsupervised bundle (distributed_nograd.py:19-34 shape): NO edge
@@ -100,7 +100,7 @@ object BundleIO {
     val out = walk.getFileSystem(conf).create(walk, true)
     try out.write(s"$walkLength $nWalks $seed\n".getBytes("UTF-8"))
     finally out.close()
-    bundleRef(spark, g, dir, name)
+    bundleRef(spark, dir, name)
   }
 
   /** The walk spec file of an unsupervised bundle. */
@@ -130,14 +130,17 @@ object BundleIO {
   private def writeLines(df: DataFrame, path: String, cols: Column*): Unit =
     df.select(concat_ws(" ", cols: _*)).write.mode("overwrite").text(path)
 
-  /** The driver's handle on a written bundle: its feature width and
-    * the session's Hadoop conf.
+  /** The driver's handle on a written bundle: its feature width, read
+    * off the first line of the `features` sub-table just written (Hadoop
+    * FS, no Spark job; 0 for an empty graph), and the session's Hadoop
+    * conf.
     */
-  private def bundleRef(spark: SparkSession, g: PropertyGraph, dir: String, name: String): BundleRef = {
-    val nF = g.nodes.select(size(col("features"))).limit(1).collect()
-      .headOption.map(_.getInt(0)).getOrElse(0)
-    BundleRef(name, dir, nF,
-      new graft.util.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
+  private def bundleRef(spark: SparkSession, dir: String, name: String): BundleRef = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val (fs, parts) = partFiles(s"$dir/$name/features", conf)
+    val nF = parts.iterator.flatMap(firstLine(fs, _)).nextOption()
+      .fold(0)(_.split(' ').length - 1)
+    BundleRef(name, dir, nF, new graft.util.SerializableHadoopConf(conf))
   }
 
   /** Task-side bundle load: plain Hadoop FS, no Spark — resolved with
@@ -176,14 +179,26 @@ object BundleIO {
     PartitionBundle(ref.name, features, adjacency, train, test, ref.numFeatures)
   }
 
-  private def readLines(dirPath: String, conf: Configuration): Iterator[String] = {
+  /** A sub-table's part files in name order, which is row order. */
+  private def partFiles(dirPath: String, conf: Configuration): (FileSystem, Seq[Path]) = {
     val p = new Path(dirPath)
     val fs = FileSystem.get(p.toUri, conf)
-    val parts = fs.globStatus(new Path(p, "part-*")).sortBy(_.getPath.getName)
-    parts.iterator.flatMap { st =>
+    (fs, fs.globStatus(new Path(p, "part-*")).toSeq.map(_.getPath).sortBy(_.getName))
+  }
+
+  /** The first non-empty line of one part file, if any. */
+  private def firstLine(fs: FileSystem, part: Path): Option[String] = {
+    val in = fs.open(part)
+    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().find(_.nonEmpty)
+    finally in.close()
+  }
+
+  private def readLines(dirPath: String, conf: Configuration): Iterator[String] = {
+    val (fs, parts) = partFiles(dirPath, conf)
+    parts.iterator.flatMap { part =>
       // read each part eagerly so its stream closes deterministically —
       // a lazy getLines() leaks one descriptor per part file until GC
-      val in = fs.open(st.getPath)
+      val in = fs.open(part)
       try {
         val src = scala.io.Source.fromInputStream(in, "UTF-8")
         src.getLines().filter(_.nonEmpty).toVector

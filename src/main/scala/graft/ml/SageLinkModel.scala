@@ -43,10 +43,17 @@ final class SageLinkModel(bundle: PartitionBundle, hp: SageHyperParams)
     sage.fit(bundle.trainExamples, epochs)
     sage.getWeights
   }
+  /** `train_*` and `test_*` metrics. An unsupervised bundle's one pair
+    * array serves as both, so it is scored once: `evaluate` is a pure
+    * function of the weights and the examples, so both keys get the
+    * values a second scoring would give.
+    */
   def evaluate(): Map[String, Double] = {
-    val train = sage.evaluate(bundle.trainExamples).map { case (k, v) => s"train_$k" -> v }
-    val test = sage.evaluate(bundle.testExamples).map { case (k, v) => s"test_$k" -> v }
-    train ++ test
+    val train = sage.evaluate(bundle.trainExamples)
+    val test =
+      if (bundle.testExamples eq bundle.trainExamples) train
+      else sage.evaluate(bundle.testExamples)
+    train.map { case (k, v) => s"train_$k" -> v } ++ test.map { case (k, v) => s"test_$k" -> v }
   }
   def genEmbeddings(nodes: Array[Long]): Array[(Long, Array[Float])] =
     sage.genEmbeddings(nodes)

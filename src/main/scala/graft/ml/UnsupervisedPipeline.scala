@@ -19,14 +19,19 @@ import graft.sources.{GraftLogger, GraphIO}
   *    and writes `embeddings_{gid}_{pid}.csv`
   *    (fl_client_unsupervised.py:117-122).
   *
-  * Both feed ConcatEmbeddings (concat_embeddings.py:12-28) to union +
-  * keep-first-dedup the per-partition tables.
+  * Both feed ConcatEmbeddings (concat_embeddings.py:12-28) to
+  * concatenate + keep-first-dedup the per-partition tables.
   *
-  * Execution shape: one Spark task per partition — the task loads its
-  * bundle (data-local), samples its walk-pair corpus from it, trains,
-  * and writes its own embeddings CSV straight from the task; rows never
-  * pass through a DataFrame or a driver collect. Weights (KB–MB) are
-  * the only thing the driver holds.
+  * Execution shape: one Spark task per partition loads its bundle
+  * (data-local), samples its walk-pair corpus from it, trains, and
+  * writes its own embeddings CSV straight from the task; rows never
+  * pass through a DataFrame or a driver collect. In `runFederated` the
+  * clients persist across rounds, and the CSV is written in the
+  * federation's final pass (`Federation.run`'s `onStop`), in the task
+  * that evaluates the final global weights — no second bundle load.
+  * `run` trains and writes in one one-task job per partition. Then one
+  * one-task job concatenates the CSVs. Weights (KB–MB) are the only
+  * thing the driver holds.
   */
 object UnsupervisedPipeline {
 
@@ -68,21 +73,6 @@ object UnsupervisedPipeline {
     }
   }
 
-  /** Train + emit every partition (one task each, jobs submitted
-    * concurrently from driver threads), then concat the CSVs.
-    */
-  private def emitEmbeddings(spark: SparkSession,
-                             refs: Seq[(String, BundleIO.BundleRef)],
-                             train: SageLinkModel => Unit,
-                             hp: SageHyperParams, graphId: String, tag: String,
-                             outDir: String): DataFrame = {
-    graft.util.Par.mapAll(refs) { case (pid, ref) =>
-      trainAndEmitOne(spark, pid, ref, train, hp, graphId, tag, outDir)
-    }
-    ConcatEmbeddings.run(spark, outDir, tag, graphId, refs.map(_._1),
-      hp.layerSizes._2)
-  }
-
   /** Zero-federation baseline. @return concatenated (id, embedding). */
   def run(spark: SparkSession, parts: Seq[(String, PropertyGraph)],
           graphId: String, epochs: Int, outDir: String,
@@ -120,15 +110,17 @@ object UnsupervisedPipeline {
     val refs = writeBundles(spark, parts, graphId, outDir, hp, walkLength, nWalks)
     val init = new LocalGraphSage(hp, Map.empty, Map.empty,
       refs.head._2.numFeatures).initializeWeights()
+    val dim = hp.layerSizes._2
     val result = Federation.run(spark, refs,
       (r: (String, BundleIO.BundleRef)) => SageLinkModel.fromRef(r._2, hp),
       init, rounds, epochs, graphId,
       weightsDir = Some(s"$outDir/weights"),
       unweighted = true, // A2: the unsupervised server's np.mean
-      logger = logger)
-    // every client runs the FINAL global encoder over its nodes
-    val out = emitEmbeddings(spark, refs,
-      m => m.setWeights(result.weights), hp, graphId, "fed", outDir)
-    (result, out)
+      logger = logger,
+      // on STOP every client runs the FINAL global encoder over its nodes
+      onStop = (r: (String, BundleIO.BundleRef), m: SageLinkModel) =>
+        GraphIO.writeEmbeddingsCsvFromTask(s"$outDir/embeddings_fed_${graphId}_${r._1}.csv",
+          dim, m.genEmbeddings(m.nodeIds).iterator, r._2.hadoopConf))
+    (result, ConcatEmbeddings.run(spark, outDir, "fed", graphId, refs.map(_._1), dim))
   }
 }

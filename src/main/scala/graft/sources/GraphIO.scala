@@ -128,8 +128,12 @@ object GraphIO {
       col("id") +:
         (0 until dim).map(i => col("embedding").getItem(i).as(i.toString)): _*)
     writeSingleCsv(wide, path, header = false,
-      headerOverride = Some(("" +: (0 until dim).map(_.toString)).mkString(",")))
+      headerOverride = Some(embeddingsHeader(dim)))
   }
+
+  /** The pandas header of a `dim`-wide embeddings CSV: `,0,1,...,d-1`. */
+  private[graft] def embeddingsHeader(dim: Int): String =
+    ("" +: (0 until dim).map(_.toString)).mkString(",")
 
   /** Task-side twin of [[writeEmbeddingsCsv]]: the reference CLIENT
     * writes its own partition's embeddings from inside the client
@@ -141,16 +145,32 @@ object GraphIO {
     * Hadoop-compatible FS: `conf` must be the DRIVER's Hadoop conf
     * (shipped via [[graft.util.SerializableHadoopConf]]) so
     * `spark.hadoop.*` settings — object-store credentials, defaultFS —
-    * reach the task.
+    * reach the task. Committed by [[writeFromTask]].
+    */
+  def writeEmbeddingsCsvFromTask(path: String, dim: Int,
+                                 rows: Iterator[(Long, Array[Float])],
+                                 conf: org.apache.hadoop.conf.Configuration): Unit =
+    writeFromTask(path, conf) { out =>
+      out.write(embeddingsHeader(dim))
+      out.write("\n")
+      rows.foreach { case (id, vec) =>
+        out.write(id.toString)
+        var i = 0
+        while (i < dim) { out.write(","); out.write(vec(i).toString); i += 1 }
+        out.write("\n")
+      }
+    }
+
+  /** Stream one UTF-8 text file to `path` from inside a task.
     *
     * Commit protocol: the stream targets an attempt-unique temp file,
     * renamed over `path` only after a complete write — a task retry or
     * speculative twin can never interleave with or truncate a reader's
     * view; whichever complete attempt renames last wins.
     */
-  def writeEmbeddingsCsvFromTask(path: String, dim: Int,
-                                 rows: Iterator[(Long, Array[Float])],
-                                 conf: org.apache.hadoop.conf.Configuration): Unit = {
+  private[graft] def writeFromTask(path: String,
+                                   conf: org.apache.hadoop.conf.Configuration)(
+                                   body: java.io.Writer => Unit): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(conf)
     val attempt = Option(org.apache.spark.TaskContext.get())
@@ -161,16 +181,8 @@ object GraphIO {
     val out = new java.io.BufferedWriter(
       new java.io.OutputStreamWriter(fs.create(tmp, true), "UTF-8"), 1 << 16)
     try {
-      try {
-        out.write(("" +: (0 until dim).map(_.toString)).mkString(","))
-        out.write("\n")
-        rows.foreach { case (id, vec) =>
-          out.write(id.toString)
-          var i = 0
-          while (i < dim) { out.write(","); out.write(vec(i).toString); i += 1 }
-          out.write("\n")
-        }
-      } finally out.close()
+      try body(out)
+      finally out.close()
     } catch {
       case t: Throwable =>
         // don't orphan the attempt file: a killed/failed attempt left
@@ -185,19 +197,24 @@ object GraphIO {
       // a concurrent complete attempt committed first — fine; anything
       // else is a real FS failure the caller must see
       require(fs.exists(p),
-        s"writeEmbeddingsCsvFromTask: commit rename $tmp -> $p failed")
+        s"writeFromTask: commit rename $tmp -> $p failed")
     }
   }
 
   /** Embedding CSV scan (concat_embeddings.py:14-17): header
-    * `,0,...,d-1`, first column = node id. Explicit schema (header row
-    * skipped). Returns `(id LONG, embedding ARRAY<FLOAT>)`.
+    * `,0,...,d-1`, first column = node id. The explicit schema carries
+    * the header's own names (an empty one for the index) and the header
+    * is checked against it: a file of another width fails the read
+    * instead of loading truncated or null-padded vectors. Columns are
+    * renamed by position. Returns `(id LONG, embedding ARRAY<FLOAT>)`.
     */
   def readEmbeddingsCsv(spark: SparkSession, path: String, dim: Int): DataFrame = {
     val schema = StructType(
-      StructField("id", LongType, nullable = false) +:
-        (0 until dim).map(i => StructField(s"e$i", FloatType, nullable = false)))
-    spark.read.schema(schema).option("header", "true").csv(path)
+      StructField("", LongType, nullable = false) +:
+        (0 until dim).map(i => StructField(i.toString, FloatType, nullable = false)))
+    spark.read.schema(schema).option("header", "true").option("enforceSchema", "false")
+      .csv(path)
+      .toDF("id" +: (0 until dim).map(i => s"e$i"): _*)
       .select(col("id"),
         array((0 until dim).map(i => col(s"e$i")): _*).as("embedding"))
   }
