@@ -57,7 +57,8 @@ object Federation {
 
   /** @param buildClient constructs/loads a partition's model ON AN
     *   EXECUTOR (must be a serializable closure; typically reads the
-    *   partition's node/edge files from shared storage). Built ONCE:
+    *   partition's node/edge files from shared storage). Built ONCE,
+    *   by round 1's pass (or the final pass when `rounds` is 0):
     *   clients live in a persisted RDD across rounds — like the
     *   reference's long-lived client processes (fl_client.py:119-175),
     *   only the weights travel per round; partition data is not
@@ -96,10 +97,11 @@ object Federation {
     // slots — weights stay correct, but the "optimizer state persists"
     // contract degraded; surface it instead of absorbing it silently
     val builds = sc.longAccumulator("graft.clientBuilds")
+    // round 1's pass builds every client (bundle load) and caches it;
+    // later passes read the cached client
     val clients = sc.parallelize(partitions, partitions.size)
       .map { p => builds.add(1L); (p, buildClient(p)) }
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-    clients.count() // materialize every client (bundle load) exactly once
     val res = federate(spark, clients, initial, rounds, epochs, graphId,
       weightsDir, unweighted, logger, onStop)
     clients.unpersist(blocking = false)

@@ -47,18 +47,23 @@ object SageHyperParams {
   * link score = `sigmoid(dot(e_src, e_dst))` ("ip" edge embedding,
   * models/supervised.py:94-96); loss = binary cross-entropy.
   *
-  * Execution shape (the GEMM batching that gives reference-stack
-  * throughput): a batch is evaluated over its DEDUPED node sets — every
-  * distinct node at each tree level is sampled and forwarded ONCE per
-  * batch (GraphSAGE §3.2 minibatch style), and the mean over k
+  * Execution shape: a batch is evaluated over its DEDUPED node sets —
+  * every distinct node at each tree level is sampled and forwarded ONCE
+  * per batch (GraphSAGE §3.2 minibatch style), and the mean over k
   * neighbor samples-with-replacement is reconstructed from the multiset
   * counts (`Σ count_v · x_v / k` — the identical estimator, computed
-  * without materializing duplicate rows). All layer applications are
-  * (distinct-nodes × features) GEMMs through netlib BLAS; feature
-  * matrices are built feature-major so each node is one contiguous
-  * column and dgemm absorbs the transpose. Dropout masks are drawn per
-  * distinct node per batch. Both link towers (src ++ dst) share one
-  * batch evaluation, so src/dst overlap dedups too.
+  * without materializing duplicate rows). Layer 1 is sparse in its
+  * input: feature rows are kept as (ascending indices, values), a
+  * batch's four layer-1 inputs are compressed columns ([[SparseCols]]),
+  * and `W1_self`/`W1_neigh` are stored feature-major — one contiguous
+  * `h1` row per feature, the row-major `LayerTensor` layout — so the
+  * forward product and the weight gradient touch only the rows of the
+  * nonzero features (CORA-style bag-of-words input sets ~18 of 1,433).
+  * The products sum in a fixed sequential order, independent of any
+  * BLAS backend. Layer 2 (`d1`-wide dense activations) runs as GEMMs
+  * through netlib BLAS. Dropout masks are drawn per distinct node per
+  * batch. Both link towers (src ++ dst) share one batch evaluation, so
+  * src/dst overlap dedups too.
   *
   * Math is Double-precision Breeze (weights cross the FedModel boundary
   * as Float per the engine-wide LayerTensor contract). Neighbor
@@ -77,30 +82,33 @@ final class LocalGraphSage(
   private val h1 = d1 / 2
   private val h2 = d2 / 2
 
-  /** Inference batches are sized so the deduped level-1 feature matrix
-    * stays small (~tens of MB) even on high-degree graphs: D1 is at most
+  /** Inference batches are sized so the deduped level-1 activations
+    * stay small (~tens of MB) even on high-degree graphs: D1 is at most
     * chunk·k1 distinct nodes.
     */
   private val inferChunk = math.max(hp.batchSize, 8192 / math.max(k1, 1))
 
-  /** Within-batch kernel parallelism: independent GEMMs (separate output
-    * buffers, shared read-only inputs) run on a few threads. Every
-    * buffer is still produced by the same sequential kernel and
+  /** Within-batch kernel parallelism: independent products (separate
+    * output buffers, shared read-only inputs) run on a few threads.
+    * Every buffer is still produced by the same sequential kernel and
     * accumulated in the same fixed order, so results are BIT-IDENTICAL
-    * to the serial schedule — this is a wall-clock lever only (measured
-    * 17 of 24 ms/batch in the four level-1 GEMMs on the unsupervised
-    * profile; ProbeEmbed --kernels). Gated on weight-matrix size so the
-    * supervised profile's microsecond GEMMs (h=5) don't pay future
-    * overhead.
+    * to the serial schedule — this is a wall-clock lever only. Gated on
+    * weight-matrix size so the supervised profile's microsecond
+    * products (h=5) don't pay future overhead.
     */
   private val parallelKernels = numFeatures.toLong * h1 >= 64 * 1024
   private def inParallel(tasks: Array[() => Unit]): Unit =
     if (parallelKernels) { graft.util.Par.mapAll(tasks.toSeq)(_.apply()); () }
     else tasks.foreach(_.apply())
 
-  // ---- weights (row-major LayerTensor <-> Breeze col-major) ----
-  private var w1s = DenseMatrix.zeros[Double](numFeatures, h1)
-  private var w1n = DenseMatrix.zeros[Double](numFeatures, h1)
+  /** Feature rows in sparse form; absent ids contribute zeros. */
+  private val featureRows: Map[Long, SparseRow] =
+    features.map { case (v, f) => v -> SparseRow(f, numFeatures) }
+
+  // ---- weights: layer 1 feature-major (the row-major LayerTensor
+  // layout, row l = feature l's h1 weights); layer 2 Breeze col-major ----
+  private var w1s = new Array[Double](numFeatures * h1)
+  private var w1n = new Array[Double](numFeatures * h1)
   private var b1 = DenseVector.zeros[Double](d1)
   private var w2s = DenseMatrix.zeros[Double](d1, h2)
   private var w2n = DenseMatrix.zeros[Double](d1, h2)
@@ -108,8 +116,8 @@ final class LocalGraphSage(
 
   // Adam state
   private var adamT = 0
-  private var adamM: Array[DenseMatrix[Double]] = _
-  private var adamV: Array[DenseMatrix[Double]] = _
+  private var adamM: Array[Array[Double]] = _
+  private var adamV: Array[Array[Double]] = _
   private var adamMb: Array[DenseVector[Double]] = _
   private var adamVb: Array[DenseVector[Double]] = _
   private val beta1 = 0.9; private val beta2 = 0.999; private val adamEps = 1e-7
@@ -122,7 +130,7 @@ final class LocalGraphSage(
       val limit = math.sqrt(6.0 / (rows + cols))
       DenseMatrix.fill(rows, cols)(rng.nextDouble() * 2 * limit - limit)
     }
-    w1s = glorot(numFeatures, h1); w1n = glorot(numFeatures, h1)
+    w1s = rowMajor(glorot(numFeatures, h1)); w1n = rowMajor(glorot(numFeatures, h1))
     b1 = DenseVector.zeros[Double](d1)
     w2s = glorot(d1, h2); w2n = glorot(d1, h2)
     b2 = DenseVector.zeros[Double](d2)
@@ -132,14 +140,16 @@ final class LocalGraphSage(
 
   private def resetAdam(): Unit = {
     adamT = 0
-    adamM = Array(w1s, w1n, w2s, w2n).map(m => DenseMatrix.zeros[Double](m.rows, m.cols))
-    adamV = Array(w1s, w1n, w2s, w2n).map(m => DenseMatrix.zeros[Double](m.rows, m.cols))
+    val sizes = Array(w1s.length, w1n.length, w2s.size, w2n.size)
+    adamM = sizes.map(new Array[Double](_))
+    adamV = sizes.map(new Array[Double](_))
     adamMb = Array(b1, b2).map(v => DenseVector.zeros[Double](v.length))
     adamVb = Array(b1, b2).map(v => DenseVector.zeros[Double](v.length))
   }
 
   def getWeights: Weights = Seq(
-    toTensor(0, w1s), toTensor(1, w1n),
+    LayerTensor(0, Seq(numFeatures, h1), w1s.map(_.toFloat)),
+    LayerTensor(1, Seq(numFeatures, h1), w1n.map(_.toFloat)),
     LayerTensor(2, Seq(d1), b1.toArray.map(_.toFloat)),
     toTensor(3, w2s), toTensor(4, w2n),
     LayerTensor(5, Seq(d2), b2.toArray.map(_.toFloat)))
@@ -151,8 +161,8 @@ final class LocalGraphSage(
     */
   def setWeights(w: Weights): Unit = {
     require(w.length == 6, s"expected 6 layer tensors, got ${w.length}")
-    w1s = fromTensor(w(0), numFeatures, h1)
-    w1n = fromTensor(w(1), numFeatures, h1)
+    w1s = tensorValues(w(0), numFeatures, h1)
+    w1n = tensorValues(w(1), numFeatures, h1)
     b1 = DenseVector(w(2).values.map(_.toDouble))
     w2s = fromTensor(w(3), d1, h2)
     w2n = fromTensor(w(4), d1, h2)
@@ -166,11 +176,17 @@ final class LocalGraphSage(
     LayerTensor(layer, Seq(m.rows, m.cols), out)
   }
 
-  private def fromTensor(t: LayerTensor, rows: Int, cols: Int): DenseMatrix[Double] = {
+  /** A layer's row-major values, shape-checked. */
+  private def tensorValues(t: LayerTensor, rows: Int, cols: Int): Array[Double] = {
     require(t.shape == Seq(rows, cols), s"layer ${t.layer}: shape ${t.shape} != ($rows,$cols)")
+    t.values.map(_.toDouble)
+  }
+
+  private def fromTensor(t: LayerTensor, rows: Int, cols: Int): DenseMatrix[Double] = {
+    val v = tensorValues(t, rows, cols)
     val m = DenseMatrix.zeros[Double](rows, cols)
     var r = 0
-    while (r < rows) { var c = 0; while (c < cols) { m(r, c) = t.values(r * cols + c); c += 1 }; r += 1 }
+    while (r < rows) { var c = 0; while (c < cols) { m(r, c) = v(r * cols + c); c += 1 }; r += 1 }
     m
   }
 
@@ -255,33 +271,7 @@ final class LocalGraphSage(
     new BatchPlan(rootPos, u0, l1idx, l1cnt, u1, l2ids, l2cnt)
   }
 
-  // ---- dense kernels (feature-major construction, contiguous columns) ----
-
-  /** Column j of feature-major `m` (numFeatures × D) := features(v). */
-  private def fillCol(m: DenseMatrix[Double], j: Int, v: Long): Unit =
-    if (v != -1L) features.get(v) match {
-      case Some(f) =>
-        val d = m.data; val base = j * numFeatures
-        var c = 0; while (c < numFeatures) { d(base + c) = f(c); c += 1 }
-      case None => // absent feature row contributes zeros (StellarGraph pad)
-    }
-
-  /** Column j of feature-major `m` += s · features(v). */
-  private def addColScaled(m: DenseMatrix[Double], j: Int, v: Long, s: Double): Unit =
-    if (v != -1L) features.get(v) match {
-      case Some(f) =>
-        val d = m.data; val base = j * numFeatures
-        var c = 0; while (c < numFeatures) { d(base + c) += s * f(c); c += 1 }
-      case None =>
-    }
-
-  /** Inverted-dropout in place: element := element/keep w.p. keep else 0. */
-  private def maskInPlace(m: DenseMatrix[Double], rng: java.util.Random): Unit = {
-    val keep = 1.0 - hp.dropout
-    val d = m.data
-    var i = 0
-    while (i < d.length) { if (rng.nextDouble() < keep) d(i) /= keep else d(i) = 0.0; i += 1 }
-  }
+  // ---- dense helpers ----
 
   private def newMask(rows: Int, cols: Int, rng: java.util.Random): DenseMatrix[Double] = {
     val keep = 1.0 - hp.dropout
@@ -355,27 +345,27 @@ final class LocalGraphSage(
   // ---- forward ----
 
   /** Everything backward needs, on the batch's distinct-node sets. The
-    * xt/mt matrices are the (masked) feature-major layer-1 inputs.
+    * xt/mt columns are the (masked) layer-1 inputs.
     */
   private final class BatchCache(
       val plan: BatchPlan,
-      val xt0: DenseMatrix[Double], val mt1: DenseMatrix[Double],
-      val xt1: DenseMatrix[Double], val mt2: DenseMatrix[Double],
+      val xt0: SparseCols, val mt1: SparseCols,
+      val xt1: SparseCols, val mt2: SparseCols,
       val a1r: DenseMatrix[Double], val a1n: DenseMatrix[Double],
       val h1rd: DenseMatrix[Double], val mhd: DenseMatrix[Double],
       val maskH1r: DenseMatrix[Double], val maskMh: DenseMatrix[Double],
       val emb: DenseMatrix[Double], val norms: DenseVector[Double])
 
   /** Everything weight-INDEPENDENT about a batch: the sample plan, the
-    * filled feature-major inputs, and the dropout masks — i.e. all of a
+    * layer-1 input columns, and the dropout masks — i.e. all of a
     * batch's RNG consumption. Preparing batch t+1 while batch t's
-    * weight-dependent GEMMs run leaves the RNG call sequence (and so
+    * weight-dependent products run leaves the RNG call sequence (and so
     * every sampled id and mask bit) identical to the serial schedule.
     */
   private final class BatchInputs(
       val plan: BatchPlan,
-      val xt0: DenseMatrix[Double], val mt1: DenseMatrix[Double],
-      val xt1: DenseMatrix[Double], val mt2: DenseMatrix[Double],
+      val xt0: SparseCols, val mt1: SparseCols,
+      val xt1: SparseCols, val mt2: SparseCols,
       val maskH1r: DenseMatrix[Double], val maskMh: DenseMatrix[Double])
 
   private def prepareBatch(roots: Array[Long], rng: java.util.Random,
@@ -383,33 +373,30 @@ final class LocalGraphSage(
     val plan = planBatch(roots, rng)
     val nU0 = plan.u0.length; val nU1 = plan.u1.length
     val doDrop = train && hp.dropout > 0.0
-    // feature-major inputs: one contiguous column per distinct node
-    val xt0 = DenseMatrix.zeros[Double](numFeatures, nU0)
-    var j = 0
-    while (j < nU0) { fillCol(xt0, j, plan.u0(j)); j += 1 }
-    val mt1 = DenseMatrix.zeros[Double](numFeatures, nU0)
-    j = 0
-    while (j < nU0) {
+    // layer-1 inputs: one column per distinct node — its own features
+    // (xt) or the mean of its sampled neighbors' (mt)
+    def cols(n: Int)(col: (Int, SparseColsBuilder) => Unit): SparseCols = {
+      val b = new SparseColsBuilder(numFeatures, featureRows)
+      var j = 0
+      while (j < n) { col(j, b); b.endCol(); j += 1 }
+      b.result()
+    }
+    val xt0 = cols(nU0)((j, b) => b.add(plan.u0(j), 1.0))
+    val mt1 = cols(nU0) { (j, b) =>
       val idxs = plan.l1idx(j); val cnt = plan.l1cnt(j)
       var t = 0
-      while (t < idxs.length) { addColScaled(mt1, j, plan.u1(idxs(t)), cnt(t).toDouble / k1); t += 1 }
-      j += 1
+      while (t < idxs.length) { b.add(plan.u1(idxs(t)), cnt(t).toDouble / k1); t += 1 }
     }
-    val xt1 = DenseMatrix.zeros[Double](numFeatures, nU1)
-    j = 0
-    while (j < nU1) { fillCol(xt1, j, plan.u1(j)); j += 1 }
-    val mt2 = DenseMatrix.zeros[Double](numFeatures, nU1)
-    j = 0
-    while (j < nU1) {
+    val xt1 = cols(nU1)((j, b) => b.add(plan.u1(j), 1.0))
+    val mt2 = cols(nU1) { (j, b) =>
       val ids = plan.l2ids(j); val cnt = plan.l2cnt(j)
       var t = 0
-      while (t < ids.length) { addColScaled(mt2, j, ids(t), cnt(t).toDouble / k2); t += 1 }
-      j += 1
+      while (t < ids.length) { b.add(ids(t), cnt(t).toDouble / k2); t += 1 }
     }
     // input dropout, per distinct node per batch (Keras GraphSAGE drops
     // inputs); the h1-level masks are also drawn HERE so every rng call
     // stays in the prepare phase — same relative order as the serial code
-    if (doDrop) { maskInPlace(xt0, rng); maskInPlace(mt1, rng); maskInPlace(xt1, rng); maskInPlace(mt2, rng) }
+    if (doDrop) Seq(xt0, mt1, xt1, mt2).foreach(_.dropout(1.0 - hp.dropout, numFeatures, rng))
     val maskH1r = if (doDrop) newMask(nU0, d1, rng) else null
     val maskMh = if (doDrop) newMask(nU0, d1, rng) else null
     new BatchInputs(plan, xt0, mt1, xt1, mt2, maskH1r, maskMh)
@@ -426,17 +413,14 @@ final class LocalGraphSage(
   private def forwardPrepared(bi: BatchInputs): BatchCache = {
     val plan = bi.plan
     val nU0 = plan.u0.length; val nU1 = plan.u1.length
-    val xt0 = bi.xt0; val mt1 = bi.mt1; val xt1 = bi.xt1; val mt2 = bi.mt2
-    // layer 1 — shared weights on roots and level-1 nodes; dgemm reads the
-    // feature-major matrices via the transpose flag (no copy). The four
-    // products are independent — see `inParallel` for the bit-identity
-    // argument.
-    val z = new Array[DenseMatrix[Double]](4)
+    // layer 1 — shared weights on roots and level-1 nodes, written as
+    // `[x·W1s | m·W1n] + b1`. The four products fill disjoint halves —
+    // see `inParallel` for the bit-identity argument.
+    val a1r = DenseMatrix.zeros[Double](nU0, d1)
+    val a1n = DenseMatrix.zeros[Double](nU1, d1)
     inParallel(Array(
-      () => z(0) = xt0.t * w1s, () => z(1) = mt1.t * w1n,
-      () => z(2) = xt1.t * w1s, () => z(3) = mt2.t * w1n))
-    val a1r = concatBias(z(0), z(1), b1)
-    val a1n = concatBias(z(2), z(3), b1)
+      () => bi.xt0.forward(w1s, h1, b1.data, a1r, 0), () => bi.mt1.forward(w1n, h1, b1.data, a1r, h1),
+      () => bi.xt1.forward(w1s, h1, b1.data, a1n, 0), () => bi.mt2.forward(w1n, h1, b1.data, a1n, h1)))
     val h1n = relu(a1n)
     // layer-2 neighbor mean per distinct root, from the multiset counts
     val mh = DenseMatrix.zeros[Double](nU0, d1)
@@ -470,14 +454,14 @@ final class LocalGraphSage(
       c = 0; while (c < d2) { emb.data(c * nU0 + i) = h2.data(c * nU0 + i) / norms(i); c += 1 }
       i += 1
     }
-    new BatchCache(plan, xt0, mt1, xt1, mt2, a1r, a1n, h1rd, mh,
+    new BatchCache(plan, bi.xt0, bi.mt1, bi.xt1, bi.mt2, a1r, a1n, h1rd, mh,
       maskH1r, maskMh, emb, norms)
   }
 
   // ---- gradients ----
   private final class Grads {
-    val gW1s = DenseMatrix.zeros[Double](numFeatures, h1)
-    val gW1n = DenseMatrix.zeros[Double](numFeatures, h1)
+    val gW1s = new Array[Double](numFeatures * h1) // feature-major, as w1s
+    val gW1n = new Array[Double](numFeatures * h1)
     val gB1 = DenseVector.zeros[Double](d1)
     val gW2s = DenseMatrix.zeros[Double](d1, h2)
     val gW2n = DenseMatrix.zeros[Double](d1, h2)
@@ -537,19 +521,11 @@ final class LocalGraphSage(
     reluBackInPlace(dH1n, bc.a1n)
     g.gB1 :+= colSums(dH1r)
     g.gB1 :+= colSums(dH1n)
-    // the four weight-gradient products compute in parallel; the
-    // accumulation into gW1s/gW1n keeps the exact serial order, so the
-    // Double addition sequence (and its rounding) is unchanged
-    val p1 = new Array[DenseMatrix[Double]](4)
+    // gW1s and gW1n accumulate in parallel, each in a fixed order (roots,
+    // then level-1 nodes), so the Double addition sequence is fixed
     inParallel(Array(
-      () => p1(0) = bc.xt0 * dH1r(::, 0 until h1),
-      () => p1(1) = bc.mt1 * dH1r(::, h1 until d1),
-      () => p1(2) = bc.xt1 * dH1n(::, 0 until h1),
-      () => p1(3) = bc.mt2 * dH1n(::, h1 until d1)))
-    addInPlace(g.gW1s, p1(0))
-    addInPlace(g.gW1n, p1(1))
-    addInPlace(g.gW1s, p1(2))
-    addInPlace(g.gW1n, p1(3))
+      () => { bc.xt0.backward(dH1r, 0, h1, g.gW1s); bc.xt1.backward(dH1n, 0, h1, g.gW1s) },
+      () => { bc.mt1.backward(dH1r, h1, h1, g.gW1n); bc.mt2.backward(dH1n, h1, h1, g.gW1n) }))
   }
 
   /** Zero `d` wherever the pre-activation `a` was non-positive. */
@@ -622,7 +598,7 @@ final class LocalGraphSage(
     val (bc, loss, dEmbU) = pairForward(src, dst, labels, rng, train = true)
     val g = new Grads
     backwardBatch(bc, dEmbU, g)
-    (loss / src.length, Seq(rowMajor(g.gW1s), rowMajor(g.gW1n), g.gB1.toArray,
+    (loss / src.length, Seq(g.gW1s, g.gW1n, g.gB1.toArray,
       rowMajor(g.gW2s), rowMajor(g.gW2n), g.gB2.toArray))
   }
 
@@ -636,12 +612,12 @@ final class LocalGraphSage(
   private def adamStep(g: Grads): Unit = {
     adamT += 1
     val lr = hp.learningRate * math.sqrt(1 - math.pow(beta2, adamT)) / (1 - math.pow(beta1, adamT))
-    val mats = Array((w1s, g.gW1s, 0), (w1n, g.gW1n, 1), (w2s, g.gW2s, 2), (w2n, g.gW2n, 3))
+    val mats = Array((w1s, g.gW1s, 0), (w1n, g.gW1n, 1),
+      (w2s.data, g.gW2s.data, 2), (w2n.data, g.gW2n.data, 3))
     // per-slot updates touch disjoint state; each slot's loop is
     // unchanged, so the update is bit-identical to the serial schedule
-    inParallel(mats.map { case (w, gw, idx) => () => {
-      val wd = w.data; val gd = gw.data
-      val md = adamM(idx).data; val vd = adamV(idx).data
+    inParallel(mats.map { case (wd, gd, idx) => () => {
+      val md = adamM(idx); val vd = adamV(idx)
       var i = 0
       while (i < wd.length) {
         val grad = gd(i)
@@ -828,7 +804,7 @@ final class LocalGraphSage(
   /** G10 — embeddings for `nodes` via the encoder tower (dropout off,
     * L2-normalized, models/unsupervised.py:81-87,105-107). Batches are
     * `inferChunk`-sized so the whole partition runs as a handful of
-    * deduped GEMMs.
+    * deduped batches.
     */
   def genEmbeddings(nodes: Array[Long]): Array[(Long, Array[Float])] = {
     val rng = new java.util.Random(hp.seed ^ 0x3bedd179L)
@@ -843,4 +819,136 @@ final class LocalGraphSage(
       }
     }.toArray
   }
+}
+
+/** A node's feature row in sparse form: its nonzero features' ascending
+  * indices and their values.
+  */
+private[ml] final class SparseRow(val idx: Array[Int], val vals: Array[Float])
+
+private[ml] object SparseRow {
+  /** The nonzeros among `dense`'s first `width` entries. */
+  def apply(dense: Array[Float], width: Int): SparseRow = {
+    var n = 0; var c = 0
+    while (c < width) { if (dense(c) != 0f) n += 1; c += 1 }
+    val idx = new Array[Int](n); val vals = new Array[Float](n)
+    n = 0; c = 0
+    while (c < width) { if (dense(c) != 0f) { idx(n) = c; vals(n) = dense(c); n += 1 }; c += 1 }
+    new SparseRow(idx, vals)
+  }
+}
+
+/** A layer-1 input as compressed sparse columns, one per node: column j
+  * holds the feature indices `idx(ptr(j) until ptr(j + 1))`, ascending,
+  * with their values in `vals`. Weights are feature-major: row l of a
+  * `w` holds feature l's `h` contiguous weights.
+  */
+private[ml] final class SparseCols(val ptr: Array[Int], val idx: Array[Int],
+                                   val vals: Array[Double]) {
+  def nCols: Int = ptr.length - 1
+
+  /** Inverted dropout as if the columns were dense (`numFeatures` rows):
+    * one `rng.nextDouble()` per element, column by column, and a stored
+    * value becomes `value/keep` if its draw is below `keep`, else 0.
+    */
+  def dropout(keep: Double, numFeatures: Int, rng: java.util.Random): Unit = {
+    var j = 0
+    while (j < nCols) {
+      var p = ptr(j); val end = ptr(j + 1)
+      var c = 0
+      while (c < numFeatures) {
+        val kept = rng.nextDouble() < keep
+        if (p < end && idx(p) == c) { vals(p) = if (kept) vals(p) / keep else 0.0; p += 1 }
+        c += 1
+      }
+      j += 1
+    }
+  }
+
+  /** `out(j, off + c) = Σ_l x(l, j)·w(l·h + c) + bias(off + c)` for every
+    * column j, summed over the column's entries in ascending l.
+    * `out` is a contiguous column-major matrix with `nCols` rows.
+    */
+  def forward(w: Array[Double], h: Int, bias: Array[Double],
+              out: breeze.linalg.DenseMatrix[Double], off: Int): Unit = {
+    val acc = new Array[Double](h)
+    val od = out.data; val n = out.rows
+    var j = 0
+    while (j < nCols) {
+      java.util.Arrays.fill(acc, 0.0)
+      var p = ptr(j)
+      while (p < ptr(j + 1)) {
+        val x = vals(p); val base = idx(p) * h
+        var c = 0; while (c < h) { acc(c) += x * w(base + c); c += 1 }
+        p += 1
+      }
+      var c = 0; while (c < h) { od((off + c) * n + j) = acc(c) + bias(off + c); c += 1 }
+      j += 1
+    }
+  }
+
+  /** `gw(l·h + c) += x(l, j)·dH(j, off + c)` over every stored entry, in
+    * column order. `dH` is a contiguous column-major matrix with `nCols`
+    * rows.
+    */
+  def backward(dH: breeze.linalg.DenseMatrix[Double], off: Int, h: Int,
+               gw: Array[Double]): Unit = {
+    val row = new Array[Double](h)
+    val dd = dH.data; val n = dH.rows
+    var j = 0
+    while (j < nCols) {
+      var c = 0; while (c < h) { row(c) = dd((off + c) * n + j); c += 1 }
+      var p = ptr(j)
+      while (p < ptr(j + 1)) {
+        val x = vals(p); val base = idx(p) * h
+        c = 0; while (c < h) { gw(base + c) += x * row(c); c += 1 }
+        p += 1
+      }
+      j += 1
+    }
+  }
+}
+
+/** Builds [[SparseCols]] a column at a time: `add(v, s)` adds `s` times
+  * node v's feature row (nothing for the sentinel -1 or a node without
+  * one), `endCol` closes the column. Each entry accumulates
+  * `0.0 + s₁·x₁ + s₂·x₂ + …` in call order — the dense column's sums
+  * without their zero terms, so every stored value equals the dense entry.
+  */
+private[ml] final class SparseColsBuilder(numFeatures: Int, rows: Map[Long, SparseRow]) {
+  private val acc = new Array[Double](numFeatures)
+  private val seen = new Array[Boolean](numFeatures)
+  private val touched = new Array[Int](numFeatures)
+  private var nTouched = 0
+  private val ptr = scala.collection.mutable.ArrayBuilder.make[Int]
+  private val idx = scala.collection.mutable.ArrayBuilder.make[Int]
+  private val vals = scala.collection.mutable.ArrayBuilder.make[Double]
+  private var nnz = 0
+  ptr += 0
+
+  def add(v: Long, s: Double): Unit =
+    if (v != -1L) rows.get(v).foreach { r =>
+      var p = 0
+      while (p < r.idx.length) {
+        val l = r.idx(p)
+        if (!seen(l)) { seen(l) = true; touched(nTouched) = l; nTouched += 1 }
+        acc(l) += s * r.vals(p)
+        p += 1
+      }
+    }
+
+  def endCol(): Unit = {
+    java.util.Arrays.sort(touched, 0, nTouched)
+    var t = 0
+    while (t < nTouched) {
+      val l = touched(t)
+      idx += l; vals += acc(l)
+      acc(l) = 0.0; seen(l) = false
+      t += 1
+    }
+    nnz += nTouched; nTouched = 0
+    ptr += nnz
+  }
+
+  def result(): SparseCols = new SparseCols(ptr.result(), idx.result(), vals.result())
 }

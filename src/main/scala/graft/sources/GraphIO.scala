@@ -117,31 +117,19 @@ object GraphIO {
   def writeEdgesCsv(edges: DataFrame, path: String): Unit =
     writeSingleCsv(edges.select(col("source"), col("target")), path, header = true)
 
-  /** S8 — embedding CSV sink (`emb.to_csv(path)` with a nameless index,
-    * fl_client_unsupervised.py:121-122, concat_embeddings.py:27-28).
-    * pandas writes header `,0,1,...,d-1` (leading empty cell for the
-    * index), which is not a legal Spark column name — so the header line
-    * is streamed in explicitly.
-    */
-  def writeEmbeddingsCsv(emb: DataFrame, path: String, dim: Int): Unit = {
-    val wide = emb.select(
-      col("id") +:
-        (0 until dim).map(i => col("embedding").getItem(i).as(i.toString)): _*)
-    writeSingleCsv(wide, path, header = false,
-      headerOverride = Some(embeddingsHeader(dim)))
-  }
-
   /** The pandas header of a `dim`-wide embeddings CSV: `,0,1,...,d-1`. */
   private[graft] def embeddingsHeader(dim: Int): String =
     ("" +: (0 until dim).map(_.toString)).mkString(",")
 
-  /** Task-side twin of [[writeEmbeddingsCsv]]: the reference CLIENT
-    * writes its own partition's embeddings from inside the client
-    * process (fl_client_unsupervised.py:117-122) — this is the same
-    * topology: the training task streams its rows straight to storage
-    * with no DataFrame round-trip and no driver involvement. Identical
-    * file shape (pandas header `,0..d-1`; `Float.toString` values, the
-    * rendering Spark's CSV writer uses for FloatType). Works on any
+  /** S8 — embedding CSV sink (`emb.to_csv(path)` with a nameless index,
+    * fl_client_unsupervised.py:121-122, concat_embeddings.py:27-28).
+    * The reference CLIENT writes its own partition's embeddings from
+    * inside the client process (fl_client_unsupervised.py:117-122) —
+    * this is the same topology: the training task streams its rows
+    * straight to storage with no DataFrame round-trip and no driver
+    * involvement. pandas' header `,0,1,...,d-1` (leading empty cell for
+    * the index); `Float.toString` values, the rendering Spark's CSV
+    * writer uses for FloatType. Works on any
     * Hadoop-compatible FS: `conf` must be the DRIVER's Hadoop conf
     * (shipped via [[graft.util.SerializableHadoopConf]]) so
     * `spark.hadoop.*` settings — object-store credentials, defaultFS —
@@ -265,8 +253,7 @@ object GraphIO {
   /** Write a DataFrame as exactly one CSV file at `path` (pandas
     * `to_csv` parity). Coalesces to a single task — fixture-scale only.
     */
-  private[graft] def writeSingleCsv(df: DataFrame, path: String, header: Boolean,
-                                    headerOverride: Option[String] = None): Unit = {
+  private[graft] def writeSingleCsv(df: DataFrame, path: String, header: Boolean): Unit = {
     val spark = df.sparkSession
     val tmp = path + ".spark-tmp"
     df.coalesce(1).write.mode("overwrite").option("header", header.toString).csv(tmp)
@@ -280,27 +267,10 @@ object GraphIO {
       val part = parts(0).getPath
       val dest = new Path(path)
       if (fs.exists(dest)) fs.delete(dest, false)
-      headerOverride match {
-        case None =>
-          // rename returns false (not an exception) on several FS
-          // boundaries — an unchecked false silently committed nothing
-          require(fs.rename(part, dest),
-            s"writeSingleCsv: commit rename $part -> $dest failed")
-        case Some(h) =>
-          // stitch inside the temp dir, then ONE atomic rename to the
-          // committed name — a mid-copy failure must never leave a
-          // truncated file where a reader expects a complete artifact
-          val stitched = new Path(tmp, "stitched.csv")
-          val out = fs.create(stitched, true)
-          try {
-            out.write((h + "\n").getBytes("UTF-8"))
-            val in = fs.open(part)
-            try org.apache.hadoop.io.IOUtils.copyBytes(in, out, conf, false)
-            finally in.close()
-          } finally out.close()
-          require(fs.rename(stitched, dest),
-            s"writeSingleCsv: commit rename $stitched -> $dest failed")
-      }
+      // rename returns false (not an exception) on several FS
+      // boundaries — an unchecked false silently committed nothing
+      require(fs.rename(part, dest),
+        s"writeSingleCsv: commit rename $part -> $dest failed")
     } finally fs.delete(new Path(tmp), true)
   }
 }

@@ -28,7 +28,7 @@ object WeightsIO {
     import spark.implicits._
     weights.toDF()
       .select(col("layer"), col("shape"), col("values"))
-      .repartition(1)
+      .coalesce(1)
       .write.mode("overwrite").parquet(path)
   }
 
