@@ -25,91 +25,6 @@ object ProbeEmbed {
       println(f"[probe-embed] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
       r
     }
-    // --- batch-shaped kernel microbench (CORA unsup profile) ---
-    // proportions decide where within-batch parallelism pays
-    if (args.contains("--kernels")) {
-      import breeze.linalg.{DenseMatrix, DenseVector}
-      val F = 1433; val nU0 = 32; val nU1 = 130; val h = 128; val d1 = 256
-      val rng = new scala.util.Random(1)
-      val xt0 = DenseMatrix.fill(F, nU0)(rng.nextDouble())
-      val xt1 = DenseMatrix.fill(F, nU1)(rng.nextDouble())
-      val w1 = DenseMatrix.fill(F, h)(rng.nextDouble())
-      val dH1r = DenseMatrix.fill(nU0, d1)(rng.nextDouble())
-      val dH1n = DenseMatrix.fill(nU1, d1)(rng.nextDouble())
-      val wParams = Array(DenseMatrix.fill(F, h)(rng.nextDouble()),
-        DenseMatrix.fill(F, h)(rng.nextDouble()),
-        DenseMatrix.fill(d1, h)(rng.nextDouble()),
-        DenseMatrix.fill(d1, h)(rng.nextDouble()))
-      val mSlots = wParams.map(m => DenseMatrix.zeros[Double](m.rows, m.cols))
-      val vSlots = wParams.map(m => DenseMatrix.zeros[Double](m.rows, m.cols))
-      val reps = 200
-      def bench(label: String)(f: => Unit): Unit = {
-        (1 to 20).foreach(_ => f) // warm
-        val t0 = System.nanoTime()
-        (1 to reps).foreach(_ => f)
-        println(f"[probe-embed] kernel $label: ${(System.nanoTime() - t0) / 1e6 / reps}%.3f ms/batch")
-      }
-      bench("fwd 4 GEMMs (2 small + 2 big)") {
-        val _ = xt0.t * w1; val _2 = xt0.t * w1
-        val _3 = xt1.t * w1; val _4 = xt1.t * w1
-      }
-      bench("bwd 4 GEMMs (gW1 accums)") {
-        val _ = xt0 * dH1r(::, 0 until h); val _2 = xt0 * dH1r(::, h until d1)
-        val _3 = xt1 * dH1n(::, 0 until h); val _4 = xt1 * dH1n(::, h until d1)
-      }
-      // Is a column-split dgemm BITWISE equal to the whole call?
-      // (If the kernel's per-element k-accumulation order depends only
-      // on k, splitting the output columns is a free parallelism axis.)
-      locally {
-        val whole = xt0.t * w1
-        val l = xt0.t * w1(::, 0 until h / 2)
-        val r = xt0.t * w1(::, h / 2 until h)
-        val eqTN = (0 until nU0).forall(i => (0 until h).forall { j =>
-          val v = if (j < h / 2) l(i, j) else r(i, j - h / 2)
-          java.lang.Double.doubleToRawLongBits(whole(i, j)) ==
-            java.lang.Double.doubleToRawLongBits(v)
-        })
-        println(s"[probe-embed] TN column-split bitwise-equal: $eqTN")
-        val a = DenseMatrix.fill(F, nU1)(rng.nextDouble())
-        val b = DenseMatrix.fill(nU1, d1)(rng.nextDouble())
-        val wholeNN = a * b
-        val lN = a * b(::, 0 until d1 / 2)
-        val rN = a * b(::, d1 / 2 until d1)
-        val eqNN = (0 until F).forall(i => (0 until d1).forall { j =>
-          val v = if (j < d1 / 2) lN(i, j) else rN(i, j - d1 / 2)
-          java.lang.Double.doubleToRawLongBits(wholeNN(i, j)) ==
-            java.lang.Double.doubleToRawLongBits(v)
-        })
-        println(s"[probe-embed] NN column-split bitwise-equal: $eqNN")
-        // row-split of the LEFT operand for the NN case (A's rows are
-        // the output rows): C(0:m/2, :) from A(0:m/2, :) * B
-        val lR = a(0 until F / 2, ::) * b
-        val rR = a(F / 2 until F, ::) * b
-        val eqNNrow = (0 until F).forall(i => (0 until d1).forall { j =>
-          val v = if (i < F / 2) lR(i, j) else rR(i - F / 2, j)
-          java.lang.Double.doubleToRawLongBits(wholeNN(i, j)) ==
-            java.lang.Double.doubleToRawLongBits(v)
-        })
-        println(s"[probe-embed] NN row-split bitwise-equal: $eqNNrow")
-      }
-      bench("adam over 4 weight mats") {
-        var idx = 0
-        while (idx < 4) {
-          val wd = wParams(idx).data; val gd = wParams(idx).data
-          val md = mSlots(idx).data; val vd = vSlots(idx).data
-          var i = 0
-          while (i < wd.length) {
-            val grad = gd(i)
-            md(i) = 0.9 * md(i) + 0.1 * grad
-            vd(i) = 0.999 * vd(i) + 0.001 * grad * grad
-            wd(i) -= 0.001 * md(i) / (math.sqrt(vd(i)) + 1e-7)
-            i += 1
-          }
-          idx += 1
-        }
-      }
-      spark.stop(); return
-    }
     try {
       val parts = Seq("0", "1").map { pid =>
         val m = MergePipeline.merge(spark, storeDir, storeDir, "4", pid)

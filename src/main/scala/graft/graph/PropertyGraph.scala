@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import scala.collection.mutable
+
 import graft.sources.GraphIO
 
 /** G1/G2 — the property-graph data model (SURVEY.md §2.7).
@@ -105,6 +107,25 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
 }
 
 object PropertyGraph {
+
+  /** `adjacency()` built in memory from one partition's raw edge list,
+    * for a client task that holds the whole partition: every edge adds
+    * both directions (a self-loop appears twice), parallel edges are
+    * kept, each neighbour array is sorted, ids that appear only in edges
+    * get an entry and nodes with no edges get none — key for key and
+    * array for array what `adjacency().collect()` returns.
+    */
+  def localAdjacency(edges: IterableOnce[(Long, Long)]): Map[Long, Array[Long]] = {
+    val lists = mutable.LongMap.empty[mutable.ArrayBuilder.ofLong]
+    def add(id: Long, nbr: Long): Unit =
+      lists.getOrElseUpdate(id, new mutable.ArrayBuilder.ofLong).addOne(nbr)
+    edges.iterator.foreach { case (s, t) => add(s, t); add(t, s) }
+    lists.iterator.map { case (id, b) =>
+      val nbrs = b.result()
+      java.util.Arrays.sort(nbrs)
+      id -> nbrs
+    }.toMap
+  }
 
   /** Size-gated connected components over a PAIR DataFrame — the
     * group-forming step every dedup family member ends with (near-dup

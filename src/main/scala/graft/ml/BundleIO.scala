@@ -11,14 +11,18 @@ import graft.graph.{EdgeSplitter, PropertyGraph}
   * partition's data.
   *
   * `write` runs the double edge split and DISTRIBUTED Spark text writes
-  * of features / adjacency / train / test under `dir/name/`;
-  * `writeUnsupervised` writes features / adjacency plus the walk spec,
-  * and the client samples its pair corpus when it loads. The only thing
-  * that returns to the driver is a `BundleRef` (paths + feature count).
-  * `load` runs INSIDE an executor task (plain Hadoop FS reads, no
-  * SparkSession) and builds the in-memory `PartitionBundle` the trainer
-  * owns — the same topology as the reference, where each client process
-  * reads its own partition's CSVs locally (fl_client.py:194-208).
+  * of features / edges / train / test under `dir/name/`;
+  * `writeUnsupervised` writes features / edges plus the walk spec, and
+  * the client samples its pair corpus when it loads. Neither stores an
+  * adjacency: a bundle carries the raw edge list, and the client task
+  * builds its adjacency from it (`PropertyGraph.localAdjacency`), as
+  * the reference client builds `StellarGraph(nodes, edges)` itself
+  * (models/unsupervised.py:48-49, models/supervised.py:65). The only
+  * thing that returns to the driver is a `BundleRef` (paths + feature
+  * count). `load` runs INSIDE an executor task (plain Hadoop FS reads,
+  * no SparkSession) and builds the in-memory `PartitionBundle` the
+  * trainer owns — the same topology as the reference, where each client
+  * process reads its own partition's CSVs locally (fl_client.py:194-208).
   *
   * Scale: each sub-table is a partitioned text directory (no
   * coalesce-to-1); a bundle is one graph PARTITION, sized to fit one
@@ -45,19 +49,21 @@ object BundleIO {
   }
 
   /** Split + persist one partition's training bundle; returns its ref.
-    * Layout: `dir/name/{features,adjacency,train,test}/part-*` —
-    * space-separated text: `id f…` / `id nbr…` / `src dst label`.
+    * Layout: `dir/name/{features,edges,train,test}/part-*` —
+    * space-separated text: `id f…` / `src dst` / `src dst label`.
     * The double split holds out 10% of edges as test, then 10% of the
     * residual as train examples (the reference's two
-    * `EdgeSplitter.train_test_split(p=0.1)` calls).
+    * `EdgeSplitter.train_test_split(p=0.1)` calls); `edges` is the
+    * train residual, the graph the client's samplers see.
     */
   def write(spark: SparkSession, dir: String, name: String, g: PropertyGraph,
             seed: Long = 42L): BundleRef = {
     val testSplit = EdgeSplitter.trainTestSplit(g, 0.1, seed)
     val trainSplit = EdgeSplitter.trainTestSplit(testSplit.residual, 0.1, seed + 1)
     val base = s"$dir/$name"
-    delete(base, Seq(WalkFile), spark.sparkContext.hadoopConfiguration)
-    // Every sub-table is written in CANONICAL (sorted) order: the
+    delete(base, Seq(WalkFile, "adjacency"), spark.sparkContext.hadoopConfiguration)
+    writeGraph(g.nodes, trainSplit.residual.edges, base)
+    // The example files are written in CANONICAL (sorted) order: the
     // split's example SET is seeded-deterministic, but its row order
     // reflects plan internals (partition boundaries, aggregate
     // iteration) that shift between runs — and the trainer's seeded
@@ -66,7 +72,6 @@ object BundleIO {
     // AUC run to run). A global sort pins it; range-partitioned sorted
     // part files concatenate to the total order however the partition
     // boundaries fall, at the cost of one bounded ETL-time shuffle.
-    writeGraph(g.nodes, trainSplit.residual.adjacency(), base)
     writeLines(trainSplit.examples.orderBy("source", "target", "label"),
       s"$base/train", col("source"), col("target"), col("label"))
     writeLines(testSplit.examples.orderBy("source", "target", "label"),
@@ -75,10 +80,10 @@ object BundleIO {
   }
 
   /** Unsupervised bundle (distributed_nograd.py:19-34 shape): NO edge
-    * split — the full graph's adjacency is the sampling structure.
-    * Layout: `dir/name/{features,adjacency}/part-*` plus `walk`, one
-    * line `length nWalks seed`. The walk-co-occurrence pair corpus is
-    * not stored: `load` samples it from the loaded adjacency
+    * split — the full graph is the sampling structure.
+    * Layout: `dir/name/{features,edges}/part-*` plus `walk`, one line
+    * `length nWalks seed`. The walk-co-occurrence pair corpus is not
+    * stored: `load` samples it from the adjacency it builds
     * (`RandomWalk.localPairs`, row for row the pairs
     * `RandomWalk.unsupervisedPairs` draws), as each reference client
     * runs `UnsupervisedSampler` over its own partition
@@ -91,11 +96,8 @@ object BundleIO {
                         seed: Long = 42L): BundleRef = {
     val base = s"$dir/$name"
     val conf = spark.sparkContext.hadoopConfiguration
-    delete(base, Seq("train", "test"), conf)
-    // canonical (sorted) order throughout — see `write`: the loaded
-    // row order feeds the trainer's seeded shuffle, so plan-internal
-    // order drift is a training-dynamics change
-    writeGraph(g.nodes, g.adjacency(), base)
+    delete(base, Seq("train", "test", "adjacency"), conf)
+    writeGraph(g.nodes, g.edges, base)
     val walk = new Path(s"$base/$WalkFile")
     val out = walk.getFileSystem(conf).create(walk, true)
     try out.write(s"$walkLength $nWalks $seed\n".getBytes("UTF-8"))
@@ -106,9 +108,11 @@ object BundleIO {
   /** The walk spec file of an unsupervised bundle. */
   private val WalkFile = "walk"
 
-  /** Delete the other bundle kind's entries an earlier write under the
-    * same name left behind: `load` tells the kinds apart by the walk
-    * file, so a stale one would turn a supervised bundle unsupervised.
+  /** Delete the entries an earlier write under the same name left
+    * behind: the other bundle kind's, since `load` tells the kinds
+    * apart by the walk file, so a stale one would turn a supervised
+    * bundle unsupervised; and the `adjacency` table bundles stored
+    * before they carried the raw edge list.
     */
   private def delete(base: String, entries: Seq[String], conf: Configuration): Unit =
     entries.foreach { e =>
@@ -116,14 +120,17 @@ object BundleIO {
       p.getFileSystem(conf).delete(p, true)
     }
 
-  /** The `features` and `adjacency` sub-tables both bundle kinds
-    * share, sorted by id.
+  /** The `features` and `edges` sub-tables both bundle kinds share.
+    * `load` builds maps from both, so their row order never reaches
+    * training: no global sort, only a sort within each partition, which
+    * adds no exchange and no job, so that the bytes stay identical run
+    * to run.
     */
-  private def writeGraph(nodes: DataFrame, adjacency: DataFrame, base: String): Unit = {
-    writeLines(nodes.orderBy("id"), s"$base/features",
+  private def writeGraph(nodes: DataFrame, edges: DataFrame, base: String): Unit = {
+    writeLines(nodes.sortWithinPartitions("id"), s"$base/features",
       col("id"), col("features").cast("array<string>"))
-    writeLines(adjacency.orderBy("id"), s"$base/adjacency",
-      col("id"), col("neighbors").cast("array<string>"))
+    writeLines(edges.sortWithinPartitions("source", "target"), s"$base/edges",
+      col("source"), col("target"))
   }
 
   /** One sub-table as space-separated text lines, overwriting `path`. */
@@ -137,31 +144,43 @@ object BundleIO {
     */
   private def bundleRef(spark: SparkSession, dir: String, name: String): BundleRef = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val (fs, parts) = partFiles(s"$dir/$name/features", conf)
+    val (fs, parts) = partFiles(s"$dir/$name", "features", conf)
     val nF = parts.iterator.flatMap(firstLine(fs, _)).nextOption()
       .fold(0)(_.split(' ').length - 1)
     BundleRef(name, dir, nF, new graft.util.SerializableHadoopConf(conf))
   }
 
   /** Task-side bundle load: plain Hadoop FS, no Spark — resolved with
-    * the driver's Hadoop conf carried by the ref. An unsupervised
-    * bundle's pair corpus is sampled here, and one array serves as both
-    * train and test (the nograd pipeline never evaluates; keeping both
-    * slots filled keeps one `PartitionBundle` shape).
+    * the driver's Hadoop conf carried by the ref. The adjacency is built
+    * here from the raw edge list (`PropertyGraph.localAdjacency`, the
+    * maps `PropertyGraph.adjacency()` would give). An unsupervised
+    * bundle's pair corpus is sampled here too, and one array serves as
+    * both train and test (the nograd pipeline never evaluates; keeping
+    * both slots filled keeps one `PartitionBundle` shape). A missing
+    * sub-table or a malformed edge line fails naming the bundle.
     */
   def load(ref: BundleRef): PartitionBundle = {
     val base = s"${ref.dir}/${ref.name}"
     val conf = ref.hadoopConf
-    val features = readLines(s"$base/features", conf).map { line =>
+    val features = readLines(base, "features", conf).map { line =>
       val t = line.split(' ')
       t(0).toLong -> t.iterator.drop(1).map(_.toFloat).toArray
     }.toMap
-    val adjacency = readLines(s"$base/adjacency", conf).map { line =>
-      val t = line.split(' ')
-      t(0).toLong -> t.iterator.drop(1).map(_.toLong).toArray
-    }.toMap
+    val adjacency = PropertyGraph.localAdjacency(
+      readLines(base, "edges", conf).map { line =>
+        // parsed in place: a client loads once, mostly before the JIT
+        // has warmed this path, so per-line allocations show in its time
+        val sp = line.indexOf(' ')
+        try {
+          if (sp < 0) throw new NumberFormatException
+          (java.lang.Long.parseLong(line, 0, sp, 10), java.lang.Long.parseLong(line, sp + 1, line.length, 10))
+        } catch {
+          case _: NumberFormatException => throw new IllegalArgumentException(
+            s"bundle $base: malformed edge line '$line' (expected `source target`)")
+        }
+      })
     def examples(sub: String): Array[(Long, Long, Int)] =
-      readLines(s"$base/$sub", conf).map { line =>
+      readLines(base, sub, conf).map { line =>
         val t = line.split(' ')
         (t(0).toLong, t(1).toLong, t(2).toInt)
       }.toArray
@@ -179,10 +198,14 @@ object BundleIO {
     PartitionBundle(ref.name, features, adjacency, train, test, ref.numFeatures)
   }
 
-  /** A sub-table's part files in name order, which is row order. */
-  private def partFiles(dirPath: String, conf: Configuration): (FileSystem, Seq[Path]) = {
-    val p = new Path(dirPath)
+  /** A sub-table's part files in name order, which is row order. The
+    * sub-table must exist, so a bundle missing one (an old layout, a
+    * partial write) fails here instead of loading as empty.
+    */
+  private def partFiles(base: String, sub: String, conf: Configuration): (FileSystem, Seq[Path]) = {
+    val p = new Path(s"$base/$sub")
     val fs = FileSystem.get(p.toUri, conf)
+    require(fs.exists(p), s"bundle $base has no `$sub` sub-table")
     (fs, fs.globStatus(new Path(p, "part-*")).toSeq.map(_.getPath).sortBy(_.getName))
   }
 
@@ -193,8 +216,8 @@ object BundleIO {
     finally in.close()
   }
 
-  private def readLines(dirPath: String, conf: Configuration): Iterator[String] = {
-    val (fs, parts) = partFiles(dirPath, conf)
+  private def readLines(base: String, sub: String, conf: Configuration): Iterator[String] = {
+    val (fs, parts) = partFiles(base, sub, conf)
     parts.iterator.flatMap { part =>
       // read each part eagerly so its stream closes deterministically —
       // a lazy getLines() leaks one descriptor per part file until GC

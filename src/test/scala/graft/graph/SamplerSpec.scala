@@ -26,6 +26,21 @@ class SamplerSpec extends SparkSpec {
     Seq(1L, 2L, 3L, 4L, 5L).map(i => (i, Seq(i.toFloat))).toDF("id", "features"),
     Seq((1L, 2L), (2L, 2L), (2L, 3L), (3L, 4L), (4L, 3L), (4L, 5L)).toDF("source", "target"))
 
+  // ring 0..5 with one chord
+  private def ring = PropertyGraph(
+    (0L to 5L).map(i => (i, Seq(i.toFloat))).toDF("id", "features"),
+    ((0L to 5L).map(i => (i, (i + 1) % 6)) :+ ((0L, 3L))).toDF("source", "target"))
+
+  // edges reach ids 7 and 8, which have no feature row; 4 is isolated
+  private def edgeOnlyIds = PropertyGraph(
+    (1L to 4L).map(i => (i, Seq(i.toFloat))).toDF("id", "features"),
+    Seq((1L, 7L), (7L, 2L), (8L, 8L), (3L, 1L)).toDF("source", "target"))
+
+  // nodes and no edges at all
+  private def edgeless = PropertyGraph(
+    (1L to 3L).map(i => (i, Seq(i.toFloat))).toDF("id", "features"),
+    Seq.empty[(Long, Long)].toDF("source", "target"))
+
   test("sampleNeighbors: samples come from the true neighbor set, exactly k, with replacement") {
     val input = Seq((100L, 2L), (101L, 2L)).toDF("example_id", "node")
     val out = NeighborSampler.sampleNeighbors(input, "node", "example_id",
@@ -151,5 +166,23 @@ class SamplerSpec extends SparkSpec {
         length, nWalks, seed)
       assert(got.toSeq === expected.toSeq, s"$name, length $length, nWalks $nWalks")
     }
+  }
+
+  test("localAdjacency: the in-memory builder equals adjacency() key for key, array for array") {
+    val graphs = Seq("path" -> path, "star" -> star, "ring" -> ring, "loopy" -> loopy,
+      "edgeOnlyIds" -> edgeOnlyIds, "withIsolated" -> withIsolated, "edgeless" -> edgeless)
+    for ((name, g) <- graphs) {
+      val expected = g.adjacency().as[(Long, Array[Long])].collect().toMap
+      val got = PropertyGraph.localAdjacency(g.edges.as[(Long, Long)].collect())
+      assert(got.keySet === expected.keySet, name)
+      expected.foreach { case (id, nbrs) => assert(got(id).toSeq === nbrs.toSeq, s"$name, id $id") }
+    }
+    // the semantics themselves, spelled out on the edge cases
+    val loops = PropertyGraph.localAdjacency(loopy.edges.as[(Long, Long)].collect())
+    assert(loops(2L).toSeq === Seq(1L, 2L, 2L, 3L)) // a self-loop appears twice
+    assert(loops(3L).toSeq === Seq(2L, 4L, 4L))     // parallel edges are kept
+    val edgeOnly = PropertyGraph.localAdjacency(edgeOnlyIds.edges.as[(Long, Long)].collect())
+    assert(edgeOnly.keySet === Set(1L, 2L, 3L, 7L, 8L)) // 7 and 8 in, isolated 4 out
+    assert(PropertyGraph.localAdjacency(Iterator.empty).isEmpty)
   }
 }

@@ -3,7 +3,7 @@ package graft.ml
 import java.security.MessageDigest
 
 import graft.SparkSpec
-import graft.graph.{PropertyGraph, RandomWalk}
+import graft.graph.{EdgeSplitter, PropertyGraph, RandomWalk}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   * drift (partition boundaries, aggregate iteration) would silently
   * change training dynamics — the round-5 nondeterminism bug
   * (tools/ProbeDeterminism measured same example set, different order,
-  * different AUC per run). Canonical sorted writes pin it.
+  * different AUC per run). Sorted writes pin it: the example files are
+  * sorted globally, the features and edges within each partition.
   */
 class BundleDeterminismSpec extends SparkSpec {
   import spark.implicits._
@@ -30,6 +31,13 @@ class BundleDeterminismSpec extends SparkSpec {
         .flatMap(f => scala.io.Source.fromFile(f)("UTF-8").getLines().toVector)
       sub.getName -> md5(lines.mkString("\n"))
     }.toMap
+  }
+
+  // the names in a bundle directory
+  private def entries(base: String): Set[String] = {
+    val p = new Path(base)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+      .map(_.getPath.getName).toSet
   }
 
   // 80-node double ring (i -> i+1, i -> i+7 mod n): connected, degree 4,
@@ -52,7 +60,7 @@ class BundleDeterminismSpec extends SparkSpec {
       BundleIO.write(spark, out, "g", g)
       hashBundle(s"$out/g")
     }
-    assert(hashes(0).keySet === Set("features", "adjacency", "train", "test"))
+    assert(hashes(0).keySet === Set("features", "edges", "train", "test"))
     hashes(0).foreach { case (sub, h) =>
       assert(hashes(1)(sub) === h, s"$sub bytes differ between runs")
     }
@@ -65,11 +73,8 @@ class BundleDeterminismSpec extends SparkSpec {
   }
 
   test("unsupervised bundle writes are byte-identical across runs") {
-    val conf = spark.sparkContext.hadoopConfiguration
     val hashes = unsupervisedRuns.map { case (out, _) =>
-      val base = new Path(s"$out/g")
-      val entries = base.getFileSystem(conf).listStatus(base).map(_.getPath.getName).toSet
-      assert(entries === Set("features", "adjacency", "walk"))
+      assert(entries(s"$out/g") === Set("features", "edges", "walk"))
       hashBundle(s"$out/g")
     }
     hashes(0).foreach { case (sub, h) =>
@@ -94,11 +99,65 @@ class BundleDeterminismSpec extends SparkSpec {
     val out = java.nio.file.Files.createTempDirectory("bdetx").toString
     BundleIO.writeUnsupervised(spark, out, "g", fixtureGraph())
     val b = BundleIO.load(BundleIO.write(spark, out, "g", fixtureGraph()))
-    val base = new Path(s"$out/g")
-    val entries = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(base).map(_.getPath.getName).toSet
-    assert(entries === Set("features", "adjacency", "train", "test"))
+    assert(entries(s"$out/g") === Set("features", "edges", "train", "test"))
     assert(b.trainExamples.nonEmpty && b.testExamples.nonEmpty)
     assert(!(b.trainExamples eq b.testExamples))
+  }
+
+  private def collectAdjacency(g: PropertyGraph): Map[Long, Seq[Long]] =
+    g.adjacency().as[(Long, Array[Long])].collect().map { case (id, n) => id -> n.toSeq }.toMap
+
+  private def assertLoaded(b: PartitionBundle, g: PropertyGraph, sampled: PropertyGraph): Unit = {
+    assert(b.adjacency.map { case (id, n) => id -> n.toSeq } === collectAdjacency(sampled))
+    val features = g.nodes.as[(Long, Array[Float])].collect()
+    assert(b.features.keySet === features.map(_._1).toSet)
+    features.foreach { case (id, f) => assert(b.features(id).toSeq === f.toSeq, s"features of $id") }
+  }
+
+  test("supervised bundles load the train residual's adjacency the DataFrame pipeline builds") {
+    val g = fixtureGraph()
+    val out = java.nio.file.Files.createTempDirectory("bdeta").toString
+    val b = BundleIO.load(BundleIO.write(spark, out, "g", g))
+    // write's double split, seeds 42 then 43
+    val residual = EdgeSplitter.trainTestSplit(
+      EdgeSplitter.trainTestSplit(g, 0.1, 42L).residual, 0.1, 43L).residual
+    assertLoaded(b, g, residual)
+    // the split removed edges, so the residual's adjacency is the smaller one
+    assert(b.adjacency.values.map(_.length).sum < collectAdjacency(g).values.map(_.length).sum)
+  }
+
+  test("unsupervised bundles load the full graph's adjacency the DataFrame pipeline builds") {
+    val b = BundleIO.load(unsupervisedRuns.head._2)
+    assertLoaded(b, fixtureGraph(), fixtureGraph())
+  }
+
+  test("writes delete a stale adjacency; a missing or malformed edges table fails naming the bundle") {
+    val out = java.nio.file.Files.createTempDirectory("bdets").toString
+    val base = s"$out/g"
+    val stale = new java.io.File(s"$base/adjacency")
+    BundleIO.writeUnsupervised(spark, out, "g", fixtureGraph())
+    assert(stale.mkdir())
+    BundleIO.writeUnsupervised(spark, out, "g", fixtureGraph())
+    assert(entries(base) === Set("features", "edges", "walk"))
+    assert(stale.mkdir())
+    val ref = BundleIO.write(spark, out, "g", fixtureGraph())
+    assert(entries(base) === Set("features", "edges", "train", "test"))
+
+    // an old-layout bundle: adjacency/ and no edges/
+    val edges = new java.io.File(s"$base/edges")
+    val saved = new java.io.File(s"$out/edges.saved")
+    assert(edges.renameTo(saved) && stale.mkdir())
+    val missing = intercept[IllegalArgumentException](BundleIO.load(ref))
+    assert(missing.getMessage.contains(base) && missing.getMessage.contains("`edges`"),
+      missing.getMessage)
+
+    assert(saved.renameTo(edges))
+    // through Hadoop FS, which rewrites the part file's checksum too
+    val part = new Path(edges.listFiles().filter(_.getName.startsWith("part-")).head.toURI)
+    val os = part.getFileSystem(spark.sparkContext.hadoopConfiguration).create(part, true)
+    try os.write("1 2\n3 4 5\n".getBytes("UTF-8")) finally os.close()
+    val malformed = intercept[IllegalArgumentException](BundleIO.load(ref))
+    assert(malformed.getMessage.contains(base) && malformed.getMessage.contains("3 4 5"),
+      malformed.getMessage)
   }
 }

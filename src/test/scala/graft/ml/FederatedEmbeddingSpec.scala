@@ -152,17 +152,19 @@ class FederatedEmbeddingSpec extends SparkSpec {
     }
   }
 
-  test("one runFederated call runs 20 Spark jobs") {
-    // 14 bundle-write jobs (7 per partition); in each of the 2 rounds 1
-    // collect, whose pass also loads the clients in round 1, + 1
-    // checkpoint job; 1 final pass, which also writes the embeddings; 1
-    // concat. It was 23 while the clients were loaded in a count job of
+  test("one runFederated call runs 10 Spark jobs") {
+    // 4 bundle-write jobs (one each for a partition's features and
+    // edges); in each of the 2 rounds 1 collect, whose pass also loads
+    // the clients in round 1, + 1 checkpoint job; 1 final pass, which
+    // also writes the embeddings; 1 concat. It was 20 while each bundle
+    // write sorted its features and adjacency globally (7 jobs a
+    // partition), 23 while the clients were loaded in a count job of
     // their own and each checkpoint shuffled to one partition in a
     // second job, and 28 while
     // each bundle write ran a feature-width job, each client was loaded
     // again in a job of its own to emit, and the concat ran as 2
     // DataFrame jobs.
     first
-    assert(firstJobs === 20, s"runFederated ran $firstJobs Spark jobs")
+    assert(firstJobs === 10, s"runFederated ran $firstJobs Spark jobs")
   }
 }
