@@ -20,7 +20,7 @@ import graft.sources.GraftLogger
   * write (splits + storage; driver holds only paths) → throwaway model
   * for round-0 weights (fl_server.py:211-212) → R federated rounds
   * (broadcast → task-local train → FedAvg → checkpoint) → final
-  * evaluation + per-partition embedding CSVs.
+  * evaluation, whose per-partition metrics are logged and returned.
   */
 object FedTrain {
 
@@ -35,7 +35,7 @@ object FedTrain {
     // 1. ETL: merge raw local/central stores into canonical node/edge
     //    tables (merge.py parity), then split + persist bundles.
     //    Partitions are independent, so their ETL (dominated by the
-    //    double edge-split's iterative CC jobs) submits Spark jobs
+    //    double edge-split's iterative jobs) submits Spark jobs
     //    CONCURRENTLY from driver threads — Spark's scheduler
     //    interleaves the small per-partition jobs instead of running
     //    P serial critical paths. Each future touches only its own

@@ -1,10 +1,8 @@
 package graft.graph
 
-import org.apache.spark.graphx.{Edge, Graph, VertexId}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import org.apache.spark.storage.StorageLevel
 
 /** G3 — EdgeSplitter.train_test_split parity
   * (models/supervised.py:67-77: `method="global", keep_connected=True`,
@@ -20,22 +18,19 @@ import org.apache.spark.storage.StorageLevel
   *    self-pairs;
   *  - return the reduced graph + labeled examples.
   *
-  * Algorithm (sample-and-repair, fully distributed):
+  * Algorithm (sample-and-repair):
   *  1. rank edges by a seeded hash (deterministic under any partitioning);
-  *  2. take the top `k` unbanned edges as a trial set;
-  *  3. run GraphX connectedComponents on the residual (edges minus
-  *     accepted minus trial); trial edges whose endpoints land in
-  *     different components would disconnect → ban them, keep the rest;
-  *  4. repeat until `k` positives are accepted (≤ `maxRounds` CC jobs —
-  *     in practice 1-3 for p≈0.1).
+  *  2. take the `k` smallest-ranked unbanned edges as a trial set
+  *     (orderBy(rank, tie-breaks) + limit);
+  *  3. label the connected components of the residual (edges minus
+  *     accepted minus trial) by a union-find over the collected edge
+  *     list; trial edges whose endpoints land in different components
+  *     would disconnect → ban them, keep the rest;
+  *  4. repeat until `k` positives are accepted (at most 8 rounds — in
+  *     practice 1-3 for p≈0.1).
   *
-  * Scale notes: each round is one CC job (log-diameter Pregel) plus an
-  * exact smallest-k selection on the hash rank via `TopK.smallestBy` —
-  * plain orderBy+limit below the cutoff, approx-quantile threshold +
-  * distributed trim above it, so a billion-edge split never funnels
-  * through the driver. Negative sampling is ring-pairing over a
-  * zipWithIndex'd node list + anti-join against the edge set — no
-  * driver-side materialization, no rejection loop over collect.
+  * Negative sampling is ring-pairing over a zipWithIndex'd node list +
+  * anti-join against the edge set, with no rejection loop over a collect.
   */
 object EdgeSplitter {
 
@@ -43,14 +38,10 @@ object EdgeSplitter {
   final case class EdgeSplit(residual: PropertyGraph, examples: DataFrame,
                              numPositives: Long)
 
-  /** @param exactTopKCutoff rank-selection sizes at or below this use
-    *   the exact orderBy+limit plan; larger ones take the distributed
-    *   threshold path (TopK.smallestBy). Tests force 0 to exercise the
-    *   scale path on fixtures; both paths are exact and identical.
-    */
-  def trainTestSplit(g: PropertyGraph, p: Double, seed: Long,
-                     maxRounds: Int = 8,
-                     exactTopKCutoff: Long = 1L << 20): EdgeSplit = {
+  /** Trial-and-repair rounds before a short split fails. */
+  private val MaxRounds = 8
+
+  def trainTestSplit(g: PropertyGraph, p: Double, seed: Long): EdgeSplit = {
     val spark = g.nodes.sparkSession
     val total = g.numEdges
     val k = (p * total).toLong
@@ -73,7 +64,7 @@ object EdgeSplitter {
     var haveBanned = false
     var rounds = 0
 
-    while (acceptedCount < k && rounds < maxRounds) {
+    while (acceptedCount < k && rounds < MaxRounds) {
       rounds += 1
       val unbanned =
         if (haveBanned) ranked.join(banned, Seq("source", "target", "__dup"), "left_anti")
@@ -81,15 +72,14 @@ object EdgeSplitter {
       val pool =
         if (haveAccepted) unbanned.join(accepted, Seq("source", "target", "__dup"), "left_anti")
         else unbanned
-      val trial = graft.operators.TopK.smallestBy(pool, "__r",
-        Seq("source", "target", "__dup"), k - acceptedCount, exactTopKCutoff).cache()
+      val trial = pool.orderBy("__r", "source", "target", "__dup")
+        .limit((k - acceptedCount).toInt).cache()
       if (trial.isEmpty) {
-        rounds = maxRounds // no candidates left; stop
+        rounds = MaxRounds // no candidates left; stop
       } else {
         val removed = if (haveAccepted) accepted.unionByName(trial) else trial
         val residualEdges = ranked.join(removed, Seq("source", "target", "__dup"), "left_anti")
-        // |residual| ≤ |E|, already counted — skip a count job
-        val comp = components(spark, g.nodeIds, residualEdges, edgeCountHint = total)
+        val comp = components(spark, g.nodeIds, residualEdges)
         val judged = trial
           .join(comp.withColumnRenamed("id", "source").withColumnRenamed("component", "__cs"), Seq("source"))
           .join(comp.withColumnRenamed("id", "target").withColumnRenamed("component", "__ct"), Seq("target"))
@@ -101,7 +91,7 @@ object EdgeSplitter {
         // per round — a union-of-scans still grows O(rounds²) nodes
         // across a double split (round-4: 176 KB plan strings tripping
         // the 100 KB cap), while re-materializing ≤ k rows of 4 longs
-        // per round is noise next to the round's CC job.
+        // per round is noise next to the round's component collect.
         val safe = judged.filter(col("__cs") === col("__ct"))
           .select("source", "target", "__dup", "__r").localCheckpoint()
         val bridge = judged.filter(col("__cs") =!= col("__ct"))
@@ -130,8 +120,7 @@ object EdgeSplitter {
       throw new IllegalStateException(
         s"EdgeSplitter: only $acceptedCount of $k requested positive edges " +
           s"could be removed without disconnecting components after $rounds " +
-          s"round(s); the graph is too bridge-heavy for p=$p (lower p or " +
-          "raise maxRounds)")
+          s"round(s); the graph is too bridge-heavy for p=$p (lower p)")
     val pos = accepted.select(col("source"), col("target"), col("__dup"))
     // The split is an iterative product (anti-joins + CC per round): cut
     // the lineage here, like Pregel's periodic checkpointing, so
@@ -142,7 +131,7 @@ object EdgeSplitter {
       .select("source", "target")
       .localCheckpoint()
     val posExamples = accepted.select(col("source"), col("target"), lit(1).as("label"))
-    val negExamples = sampleNegatives(g, acceptedCount, seed, exactTopKCutoff)
+    val negExamples = sampleNegatives(g, acceptedCount, seed)
     val examples = posExamples.unionByName(negExamples).localCheckpoint()
     ranked.unpersist()
     EdgeSplit(PropertyGraph(g.nodes, residualEdges), examples, acceptedCount)
@@ -154,8 +143,7 @@ object EdgeSplitter {
     * (idx+o_j) mod N — each offset yields N candidate self-free pairs;
     * anti-join the (symmetrized) edge set, rank by hash, take n.
     */
-  private[graph] def sampleNegatives(g: PropertyGraph, n: Long, seed: Long,
-                                     exactTopKCutoff: Long = 1L << 20): DataFrame = {
+  private[graph] def sampleNegatives(g: PropertyGraph, n: Long, seed: Long): DataFrame = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
     val idx = g.nodeIds.orderBy("id").as[Long].rdd
@@ -185,8 +173,7 @@ object EdgeSplitter {
         .join(edgesBoth, Seq("source", "target"), "left_anti")
         .dropDuplicates("source", "target")
         .withColumn("__nr", xxhash64(lit(seed + 1), col("source"), col("target")))
-      graft.operators.TopK.smallestBy(pool, "__nr", Seq("source", "target"),
-          n, exactTopKCutoff)
+      pool.orderBy("__nr", "source", "target").limit(n.toInt)
         .select(col("source"), col("target"), lit(0).as("label"))
         // materialize (≤ n rows of 2 longs) so the shortfall check and
         // every downstream consumer reuse one execution
@@ -211,48 +198,27 @@ object EdgeSplitter {
     negs
   }
 
-  /** Connected components of (nodeIds, edges) → DataFrame(id, component).
-    * Component label = min vertex id in the component (GraphX CC
-    * contract) — deterministic.
-    *
-    * Size-gated plan choice (the broadcast-join trick applied to CC):
-    * below `smallCutoff` edges the labels come from a driver-side
-    * union-find over the collected edge list — the label function is
-    * identical (min id per component; ComponentsSpec asserts bitwise
-    * agreement with the Pregel path), but one collect replaces the
-    * ~10-iteration Pregel job cascade that dominates a fixture-scale
-    * split's wall-clock. At scale the GraphX path runs unchanged.
-    * `edgeCountHint` lets callers who already know |E| skip the count.
+  /** Connected components of (nodeIds, edges) → DataFrame(id, component),
+    * sorted by id: [[componentLabels]] over the collected node ids and
+    * edges.
     */
   private[graph] def components(spark: SparkSession, nodeIds: DataFrame,
-                                edges: DataFrame,
-                                edgeCountHint: Long = -1L,
-                                smallCutoff: Long = 1L << 20): DataFrame = {
-    import spark.implicits._
-    val eCount = if (edgeCountHint >= 0) edgeCountHint else edges.count()
-    if (eCount <= smallCutoff) return componentsLocal(spark, nodeIds, edges)
-    val vRDD = nodeIds.select(col("id").cast(LongType)).as[Long].rdd.map(id => (id: VertexId, ()))
-    val eRDD = edges.select(col("source"), col("target")).as[(Long, Long)]
-      .rdd.map { case (s, t) => Edge(s, t, ()) }
-    val graph = Graph(vRDD, eRDD, (),
-      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
-    val cc = graph.connectedComponents().vertices
-      .map { case (id, comp) => (id, comp) }.toDF("id", "component")
-    cc
-  }
-
-  /** The fixture-scale path: union-find on the driver, min-id labels —
-    * the exact function the GraphX path computes.
-    */
-  private[graph] def componentsLocal(spark: SparkSession, nodeIds: DataFrame,
-                                     edges: DataFrame): DataFrame = {
+                                edges: DataFrame): DataFrame = {
     import spark.implicits._
     val ids = nodeIds.select(col("id").cast(LongType)).as[Long].collect()
     val es = edges.select(col("source").cast(LongType), col("target").cast(LongType))
       .as[(Long, Long)].collect()
-    // intern node ids; edge endpoints missing from the node list are
-    // added like GraphX adds default-attr vertices (same contract)
+    componentLabels(ids, es).toSeq.toDF("id", "component")
+  }
+
+  /** Connected components of an undirected graph by union-find: one
+    * `(id, min id of its component)` row per vertex, sorted by id — the
+    * label function of GraphX's `connectedComponents`. The vertices are
+    * `ids` plus every edge endpoint not among them, as GraphX adds
+    * default-attr vertices for edge-only ids.
+    */
+  private[graph] def componentLabels(ids: Array[Long],
+                                     edges: Array[(Long, Long)]): Array[(Long, Long)] = {
     // boxed key/value types: a java.util.HashMap[Long, Int] would unbox
     // get()'s null miss to 0 and silently intern nothing
     val idIndex = new java.util.HashMap[java.lang.Long, Integer](ids.length * 2)
@@ -267,7 +233,7 @@ object EdgeSplitter {
       }
     }
     ids.foreach(intern(_): Unit)
-    val pairs = es.map { case (s, t) => (intern(s), intern(t)) }
+    val pairs = edges.map { case (s, t) => (intern(s), intern(t)) }
     val n = allIds.length
     val parent = Array.tabulate(n)(identity)
     def find(x: Int): Int = {
@@ -293,6 +259,7 @@ object EdgeSplitter {
     val out = new Array[(Long, Long)](n)
     i = 0
     while (i < n) { out(i) = (allIds(i), minId(find(i))); i += 1 }
-    out.toSeq.toDF("id", "component")
+    out.sortInPlaceBy(_._1)
+    out
   }
 }

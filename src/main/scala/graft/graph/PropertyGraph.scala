@@ -1,10 +1,7 @@
 package graft.graph
 
-import org.apache.spark.graphx.{Edge, Graph, VertexId}
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable
 
@@ -20,15 +17,10 @@ import graft.sources.GraphIO
   * Spark-first restatement: the graph IS the pair of DataFrames —
   * `nodes(id LONG, features ARRAY<FLOAT>)` and
   * `edges(source LONG, target LONG)` — kept lazy so Catalyst prunes and
-  * pushes down through every derived view. A GraphX twin (`toGraphX`) is
-  * built only for the algorithms that genuinely need vertex-centric
-  * iteration (connectivity in the edge splitter).
-  *
-  * Scale: `adjacency` is one groupBy shuffle on the symmetrized edge
-  * list; degree distribution skew (hub nodes with huge neighbor arrays)
-  * is the known risk at 100 TB — callers that sample cap the array via
-  * `adjacency(maxDegree)`, which bounds both array size and shuffle
-  * payload. Nothing in this class collects to the driver.
+  * pushes down through every derived view. Graph work on one partition
+  * (connected components, a client's adjacency) runs in memory over the
+  * collected edge list; `adjacency` is one groupBy shuffle on the
+  * symmetrized edge list.
   */
 final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
 
@@ -62,44 +54,17 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
   /** Adjacency lists `(id, neighbors ARRAY<LONG>)` for sampling joins.
     * Neighbor order is made deterministic (sorted) so that hash-seeded
     * samplers are reproducible regardless of shuffle order.
-    *
-    * @param maxDegree cap per node (deterministic: the `maxDegree`
-    *   smallest neighbor ids win) — REQUIRED at scale to bound hub-node
-    *   array size; `Int.MaxValue` keeps everything at fixture scale.
     */
-  def adjacency(maxDegree: Int = Int.MaxValue): DataFrame = {
-    val lists = symmetrizedEdges
+  def adjacency(): DataFrame =
+    symmetrizedEdges
       .groupBy("id")
       .agg(sort_array(collect_list(col("nbr"))).as("neighbors"))
-    if (maxDegree == Int.MaxValue) lists
-    else lists.select(col("id"), slice(col("neighbors"), 1, maxDegree).as("neighbors"))
-  }
-
-  /** GraphX view for vertex-centric algorithms (connectivity). Vertex
-    * attribute = feature vector; edge attribute unused.
-    */
-  def toGraphX: Graph[Array[Float], Unit] = {
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    val vRDD: RDD[(VertexId, Array[Float])] =
-      nodes.select(col("id"), col("features"))
-        .as[(Long, Array[Float])].rdd
-    val eRDD: RDD[Edge[Unit]] =
-      edges.select(col("source"), col("target"))
-        .as[(Long, Long)].rdd.map { case (s, t) => Edge(s, t, ()) }
-    Graph(vRDD, eRDD, defaultVertexAttr = Array.empty[Float],
-      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
-  }
 
   /** Number of connected components of the UNDIRECTED graph (isolated
-    * nodes count). Used by tests and the splitter's invariant checks.
-    * Size-gated like the splitter's check: union-find at fixture scale,
-    * GraphX Pregel at real scale (identical label function either way).
+    * nodes count). Used by tests.
     */
   def numConnectedComponents: Long =
-    EdgeSplitter.components(nodes.sparkSession, nodeIds, edges,
-        edgeCountHint = numEdges)
+    EdgeSplitter.components(nodes.sparkSession, nodeIds, edges)
       .select("component").distinct().count()
 
   def cache(): PropertyGraph = { nodes.cache(); edges.cache(); this }
@@ -127,37 +92,22 @@ object PropertyGraph {
     }.toMap
   }
 
-  /** Size-gated connected components over a PAIR DataFrame — the
-    * group-forming step every dedup family member ends with (near-dup
-    * groups q36, embedding-cosine groups, SemDeDup groups q60).
-    * Vertices are the pair endpoints (GraphX `Graph.fromEdges`
-    * contract), label = min id per component. Routes through
-    * `EdgeSplitter.components`, so below 2^20 edges the labels come
-    * from a driver union-find instead of the ~10-iteration Pregel
-    * cascade (ComponentsSpec: bitwise-identical labels); at scale the
-    * GraphX path runs unchanged. Pairs are persisted for the duration
-    * of the call — the pair pipeline (LSH join + cosine verify) is the
-    * expensive part and feeds both the vertex list and the edge list.
+  /** Connected components over a PAIR DataFrame — the group-forming
+    * step every dedup family member ends with (near-dup groups q36,
+    * embedding-cosine groups, SemDeDup groups q60). The pairs are
+    * collected once (one Spark job) and labelled by
+    * [[EdgeSplitter.componentLabels]]: the vertices are the pair
+    * endpoints (GraphX `Graph.fromEdges` contract), the label is the min
+    * id per component. Returns `(id LONG, keep_id LONG)` sorted by id.
     */
   def pairComponents(pairs: DataFrame,
                      aCol: String = "id_a", bCol: String = "id_b"): DataFrame = {
     val spark = pairs.sparkSession
+    import spark.implicits._
     val edges = pairs
-      .select(col(aCol).cast("long").as("source"), col(bCol).cast("long").as("target"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nEdges = edges.count()
-    val nodeIds = edges.select(col("source").as("id"))
-      .union(edges.select(col("target").as("id"))).distinct()
-    val cutoff = 1L << 20
-    val out = EdgeSplitter.components(spark, nodeIds, edges,
-        edgeCountHint = nEdges, smallCutoff = cutoff)
-      .toDF("id", "keep_id")
-    // the driver union-find path has already materialized its result so
-    // the cache is droppable; the GraphX path's output is still lazy
-    // over these edges — leave the cache in place for it (GraphX CC
-    // re-reads the edge RDD across Pregel iterations)
-    if (nEdges <= cutoff) edges.unpersist()
-    out
+      .select(col(aCol).cast("long"), col(bCol).cast("long"))
+      .as[(Long, Long)].collect()
+    EdgeSplitter.componentLabels(Array.emptyLongArray, edges).toSeq.toDF("id", "keep_id")
   }
 
   /** Build from the reference's canonical CSV pair

@@ -87,8 +87,7 @@ object BpeTrain {
   }
 
   /** Learn up to `k` merges greedily from a (word, cnt) dictionary —
-    * SIZE-GATED plan choice (the `PropertyGraph.pairComponents`
-    * driver-union-find discipline): at or below `localCutoff`
+    * SIZE-GATED plan choice: at or below `localCutoff`
     * dictionary rows the greedy loop runs DRIVER-SIDE over the
     * collected table ([[learnMergesLocal]]) — ONE Spark job total
     * instead of k pair-count jobs, which is what makes a 50k-merge

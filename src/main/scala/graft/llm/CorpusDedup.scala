@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   * so the LSH stage only ever sees one representative per exact class
   * (the skew guard NearDup documents).
   * Stage 2 (fuzzy): MinHash-LSH candidates, exact-Jaccard verified,
-  * GraphX connected components over the verified pair graph — every
-  * group keeps its minimum id, the rest drop.
+  * connected components over the verified pair graph
+  * (`PropertyGraph.pairComponents`: one collect, a driver union-find)
+  * — every group keeps its minimum id, the rest drop.
   *
   * Scale shape: stage 1 shuffles (hash, id) pairs; stage 2 is the
   * proven q27/q36 pipeline (ids-only bucket join, O(candidates)

@@ -442,8 +442,8 @@ object NearDup {
   }
 
   /** Near-dup GROUPS from the verified pair graph: connected components
-    * over near-dup pairs (size-gated: driver union-find below 2^20
-    * edges, GraphX Pregel at scale), keep the minimum id
+    * over near-dup pairs (`PropertyGraph.pairComponents`: one collect,
+    * a driver union-find), keep the minimum id
     * as each group's representative. Returns `(id, keep_id)` for every
     * doc in some group (singletons omitted). This is the "which rows
     * do I drop" form a dedup pipeline actually consumes.

@@ -366,7 +366,7 @@ object LlmQueries {
     }),
 
     // Near-dup GROUPS — the "which rows do I drop" form a dedup
-    // pipeline consumes: connected components (GraphX) over q27's
+    // pipeline consumes: connected components (union-find) over q27's
     // verified near-dup pair graph, min doc id as each group's
     // representative. Oracle: recursive min-label propagation in SQL
     // over the exact pair set (q27's oracle proved LSH pairs = exact

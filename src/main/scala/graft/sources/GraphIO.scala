@@ -14,11 +14,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * and what the graph layer wants — widening to the reference's 1434-col
   * layout only at the CSV sink boundary.
   *
-  * Scale: all readers are ordinary distributed scans (text/CSV); nothing
-  * collects. The single-file sinks exist for byte-parity with the
+  * All readers are ordinary distributed scans (text/CSV); nothing
+  * collects. The sinks write one file each, for byte-parity with the
   * reference's pandas `to_csv` artifacts (fl_server.py reads exactly one
-  * file per partition) and are documented as fixture-scale only — the
-  * 100 TB path is the partitioned parquet/CSV directory writers.
+  * file per partition).
   */
 object GraphIO {
 
@@ -81,21 +80,6 @@ object GraphIO {
         toks.getItem(0).cast(LongType).as("id"),
         // tokens 1..nFeatures; slice() is 1-based, so start=2
         slice(toks, 2, nFeatures).cast(ArrayType(FloatType)).as("features"))
-  }
-
-  /** Same scan keeping the label column — used by supervised paths that
-    * need the class (the reference drops it in merge but reads it in
-    * misc/model.py:95-99's full-table variant).
-    */
-  def readWhitespaceAttributesWithLabel(spark: SparkSession, path: String,
-                                        nFeatures: Int = NumCoraFeatures): DataFrame = {
-    val toks = regexp_extract_all(col("value"), lit("\\S+"), lit(0))
-    spark.read.text(path)
-      .filter(col("value").rlike("\\S"))
-      .select(
-        toks.getItem(0).cast(LongType).as("id"),
-        slice(toks, 2, nFeatures).cast(ArrayType(FloatType)).as("features"),
-        toks.getItem(nFeatures + 1).as("label"))
   }
 
   /** S7 — canonical node CSV sink (`nodes.to_csv(p)`, merge.py:46).
@@ -205,49 +189,6 @@ object GraphIO {
       .toDF("id" +: (0 until dim).map(i => s"e$i"): _*)
       .select(col("id"),
         array((0 until dim).map(i => col(s"e$i")): _*).as("embedding"))
-  }
-
-  /** Scale-path sink: partitioned CSV directory (no coalesce). Use this
-    * instead of the single-file writers for anything non-fixture-sized.
-    */
-  def writeCsvDir(df: DataFrame, dir: String): Unit =
-    df.write.mode("overwrite").option("header", "true").csv(dir)
-
-  /** The long-term catalog (SURVEY §1.4): graphs as PARTITIONED PARQUET
-    * under `root/{nodes,edges}/graph_id=G/partition_id=P/` — columnar,
-    * schema-embedded, partition-pruned reads (asking for one graph
-    * partition scans only its directory). The CSV writers above exist
-    * for fixture parity; this is what a 100 TB deployment stores.
-    */
-  def writeGraphParquet(nodes: DataFrame, edges: DataFrame, root: String,
-                        graphId: String, partitionId: String): Unit = {
-    import org.apache.spark.sql.functions.lit
-    // dynamic overwrite: replace only this (graph, partition) directory,
-    // never sibling partitions already in the catalog
-    nodes.withColumn("graph_id", lit(graphId))
-      .withColumn("partition_id", lit(partitionId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("graph_id", "partition_id")
-      .parquet(s"$root/nodes")
-    edges.withColumn("graph_id", lit(graphId))
-      .withColumn("partition_id", lit(partitionId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("graph_id", "partition_id")
-      .parquet(s"$root/edges")
-  }
-
-  /** Read one graph partition from the parquet catalog — the
-    * graph_id/partition_id filters prune to a single directory pair
-    * (verify with PushedFilters/partition pruning in the plan).
-    */
-  def readGraphParquet(spark: SparkSession, root: String,
-                       graphId: String, partitionId: String): (DataFrame, DataFrame) = {
-    def part(sub: String) = spark.read.parquet(s"$root/$sub")
-      .filter(col("graph_id") === graphId && col("partition_id") === partitionId)
-      .drop("graph_id", "partition_id")
-    (part("nodes"), part("edges"))
   }
 
   /** Write a DataFrame as exactly one CSV file at `path` (pandas

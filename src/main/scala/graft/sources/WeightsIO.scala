@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** A single layer tensor: row-major values + shape. The engine-wide
@@ -41,10 +41,5 @@ object WeightsIO {
       .sortBy(_._1)
       .map { case (l, s, v) => LayerTensor(l, s, v) }
       .toSeq
-  }
-
-  def asDF(spark: SparkSession, weights: Seq[LayerTensor]): DataFrame = {
-    import spark.implicits._
-    weights.toDF().select(col("layer"), col("shape"), col("values"))
   }
 }

@@ -1,31 +1,52 @@
 package graft.graph
 
-import graft.SparkSpec
+import graft.{SparkJobs, SparkSpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-/** `PropertyGraph.pairComponents` (the size-gated CC every dedup
-  * group-forming op now routes through) must produce bitwise-identical
-  * labels to the raw GraphX path it replaced at fixture scale — on the
-  * REAL pair sets of the two driver-checked group queries (q36's
-  * MinHash near-dup pairs, q60's SemDeDup pairs), not a toy graph.
-  * Below the 2^20-edge gate the labels come from the driver union-find;
-  * GraphX CC's contract (vertices = pair endpoints, label = min id per
-  * component) is the function both paths compute.
+/** `PropertyGraph.pairComponents` (the CC every dedup group-forming op
+  * routes through) must produce the labels of raw GraphX CC — vertices
+  * are the pair endpoints, label = min id per component — on the REAL
+  * pair sets of the two driver-checked group queries (q36's MinHash
+  * near-dup pairs, q60's SemDeDup pairs) and on hand-built edge cases;
+  * and it must cost one Spark job.
   */
 class PairComponentsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def rawGraphX(pairs: DataFrame): Set[(Long, Long)] = {
-    val edges = pairs.select(col("id_a").cast("long"), col("id_b").cast("long"))
-      .as[(Long, Long)].rdd.map { case (a, b) => org.apache.spark.graphx.Edge(a, b, ()) }
-    org.apache.spark.graphx.Graph.fromEdges(edges, ())
-      .connectedComponents().vertices.toDF("id", "keep_id")
-      .as[(Long, Long)].collect().toSet
+  private def rawGraphX(pairs: DataFrame): Set[(Long, Long)] =
+    GraphXComponents.labels(spark, Seq.empty[Long].toDF("id"),
+      pairs.select(col("id_a"), col("id_b")))
+
+  private def labels(pairs: DataFrame): Set[(Long, Long)] =
+    PropertyGraph.pairComponents(pairs).as[(Long, Long)].collect().toSet
+
+  test("edge cases: empty, duplicate pairs, self-pair, chain, two components") {
+    val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+    val none = PropertyGraph.pairComponents(empty)
+    assert(none.schema === StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("keep_id", LongType, nullable = false))))
+    assert(none.isEmpty && rawGraphX(empty).isEmpty)
+    // chain 900-31-7 given twice and reversed, a self-pair on 5000, and
+    // a second component 42-13 — ids non-contiguous and out of order
+    val pairs = Seq((900L, 31L), (31L, 7L), (900L, 31L), (7L, 31L),
+      (5000L, 5000L), (42L, 13L)).toDF("id_a", "id_b")
+    val rows = PropertyGraph.pairComponents(pairs).as[(Long, Long)].collect().toSeq
+    assert(rows === Seq(7L -> 7L, 13L -> 13L, 31L -> 7L, 42L -> 13L, 900L -> 7L,
+      5000L -> 5000L)) // sorted by id
+    assert(rows.toSet === rawGraphX(pairs))
   }
 
-  private def gated(pairs: DataFrame): Set[(Long, Long)] =
-    PropertyGraph.pairComponents(pairs).as[(Long, Long)].collect().toSet
+  test("one call over a checkpointed pair set runs one Spark job") {
+    val pairs = spark.sparkContext.parallelize(
+      (0L until 200L).map(i => (i, (i * 7 + 3) % 200)), 4).toDF("id_a", "id_b")
+      .localCheckpoint()
+    val (out, jobs) = SparkJobs.count(spark)(PropertyGraph.pairComponents(pairs))
+    assert(jobs === 1, s"pairComponents ran $jobs Spark jobs")
+    assert(out.as[(Long, Long)].collect().toSet === rawGraphX(pairs))
+  }
 
   test("labels equal raw GraphX on the q36 near-dup pair set") {
     val t = graft.Tables(spark, "/root/testdata/sf0.001")
@@ -36,7 +57,7 @@ class PairComponentsSpec extends SparkSpec {
     val pairs = graft.llm.NearDup.nearDupPairs(corpus, "doc_id", "text",
       threshold = 0.6, shingleN = 3, numHashes = 48, bands = 16)
       .localCheckpoint()
-    val got = gated(pairs)
+    val got = labels(pairs)
     assert(got.nonEmpty, "planted twins must produce pairs")
     assert(got === rawGraphX(pairs))
   }
@@ -55,7 +76,7 @@ class PairComponentsSpec extends SparkSpec {
     val corpus = base.unionByName(twins)
     val pairs = graft.llm.Similarity.semanticPairs(corpus, tau = 0.8, k = 1,
       iters = 0).localCheckpoint()
-    val got = gated(pairs)
+    val got = labels(pairs)
     assert(got.nonEmpty)
     assert(got === rawGraphX(pairs))
   }

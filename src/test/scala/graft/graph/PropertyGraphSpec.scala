@@ -17,14 +17,12 @@ class PropertyGraphSpec extends SparkSpec {
     assert(d === Map(1L -> 2L, 2L -> 3L, 3L -> 1L, 4L -> 0L))
   }
 
-  test("adjacency lists are sorted, keep parallel edges, honor maxDegree cap") {
+  test("adjacency lists are sorted and keep parallel edges") {
     val a = tiny.adjacency().as[(Long, Seq[Long])].collect().toMap
     assert(a(1L) === Seq(2L, 2L)) // parallel edge appears twice
     assert(a(2L) === Seq(1L, 1L, 3L))
     assert(a(3L) === Seq(2L))
     assert(!a.contains(4L)) // no edges -> no adjacency row
-    val capped = tiny.adjacency(maxDegree = 2).as[(Long, Seq[Long])].collect().toMap
-    assert(capped(2L) === Seq(1L, 1L))
   }
 
   test("nodeIds lists every node (G2)") {

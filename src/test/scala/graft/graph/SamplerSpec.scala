@@ -41,67 +41,6 @@ class SamplerSpec extends SparkSpec {
     (1L to 3L).map(i => (i, Seq(i.toFloat))).toDF("id", "features"),
     Seq.empty[(Long, Long)].toDF("source", "target"))
 
-  test("sampleNeighbors: samples come from the true neighbor set, exactly k, with replacement") {
-    val input = Seq((100L, 2L), (101L, 2L)).toDF("example_id", "node")
-    val out = NeighborSampler.sampleNeighbors(input, "node", "example_id",
-      path.adjacency(), k = 8, level = 1, seed = 42)
-      .select("example_id", "samples").as[(Long, Seq[Long])].collect().toMap
-    assert(out(100L).length === 8)
-    assert(out(100L).toSet.subsetOf(Set(1L, 3L))) // neighbors of 2
-    // independence across examples: with 8 draws from 2 options the two
-    // example rows almost surely differ under different hash streams
-    assert(out(100L) != out(101L) || out(100L).toSet.size == 1)
-  }
-
-  test("sampleNeighbors: isolated node pads with -1 sentinel") {
-    val input = Seq((1L, 9L)).toDF("example_id", "node")
-    val out = NeighborSampler.sampleNeighbors(input, "node", "example_id",
-      path.adjacency(), k = 3, level = 1, seed = 1)
-      .select("samples").as[Seq[Long]].head()
-    assert(out === Seq(-1L, -1L, -1L))
-  }
-
-  test("sampleTree2: layer shapes k1 and k1*k2, layer2 children belong to layer1 parents") {
-    val input = Seq((7L, 2L)).toDF("example_id", "node")
-    val out = NeighborSampler.sampleTree2(input, "node", "example_id",
-      path.adjacency(), k1 = 4, k2 = 3, seed = 5)
-      .select("layer1", "layer2").as[(Seq[Long], Seq[Long])].head()
-    val (l1, l2) = out
-    assert(l1.length === 4 && l2.length === 12)
-    assert(l1.toSet.subsetOf(Set(1L, 3L)))
-    // child block i must be neighbors of parent l1(i)
-    val adj = Map(1L -> Set(2L), 2L -> Set(1L, 3L), 3L -> Set(2L, 4L), 4L -> Set(3L))
-    l1.zipWithIndex.foreach { case (parent, i) =>
-      val block = l2.slice(i * 3, i * 3 + 3).toSet
-      assert(block.subsetOf(adj(parent)), s"block $i of parent $parent: $block")
-    }
-  }
-
-  test("sampleTree2: duplicate (exampleId, node) input rows collapse to ONE correct row") {
-    // sampling is a pure function of (exampleId, node), so a duplicated
-    // input row adds nothing — before the array_distinct regroup fix it
-    // merged both copies' slot structs into a single 2*k1*k2 layer2
-    val dup = Seq((7L, 2L), (7L, 2L)).toDF("example_id", "node")
-    val single = Seq((7L, 2L)).toDF("example_id", "node")
-    def run(in: org.apache.spark.sql.DataFrame) =
-      NeighborSampler.sampleTree2(in, "node", "example_id",
-        path.adjacency(), k1 = 4, k2 = 3, seed = 5)
-        .select("layer1", "layer2").as[(Seq[Long], Seq[Long])].collect().toSeq
-    val got = run(dup)
-    assert(got.length === 1)
-    assert(got.head._1.length === 4 && got.head._2.length === 12)
-    assert(got === run(single))
-  }
-
-  test("sampleTree2 is deterministic under seed") {
-    val input = Seq((7L, 2L), (8L, 3L)).toDF("example_id", "node")
-    def run(seed: Long) = NeighborSampler.sampleTree2(input, "node", "example_id",
-      path.adjacency(), 4, 3, seed).orderBy("example_id")
-      .select("layer1", "layer2").as[(Seq[Long], Seq[Long])].collect().toSeq
-    assert(run(5) === run(5))
-    assert(run(5) !== run(6))
-  }
-
   test("uniformWalks: walks follow edges, have requested length, stop at isolated starts") {
     val walks = RandomWalk.uniformWalks(path, length = 5, nWalks = 1, seed = 3)
       .select("walk").as[Seq[Long]].collect()

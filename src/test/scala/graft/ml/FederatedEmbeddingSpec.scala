@@ -1,14 +1,11 @@
 package graft.ml
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
-import graft.SparkSpec
+import graft.{SparkJobs, SparkSpec}
 import graft.etl.{ConcatEmbeddings, ConcatEmbeddingsOracle}
 import graft.graph.PropertyGraph
 import graft.sources.GraphIO
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 /** `UnsupervisedPipeline.runFederated` end to end on a synthetic
@@ -50,39 +47,8 @@ class FederatedEmbeddingSpec extends SparkSpec {
     UnsupervisedPipeline.runFederated(spark, parts, graphId, rounds = 2, epochs = 1, dir, hp,
       logger = graft.sources.GraftLogger(s"$dir/session.log"))
 
-  /** Spark jobs started by `body`, counted between two sentinel jobs:
-    * listener events arrive in order, so once the closing sentinel's
-    * start is seen, every job `body` started has been counted.
-    */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val count = new AtomicInteger
-    val closed = new CountDownLatch(1)
-    @volatile var open = false
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case "jobcount.open" => open = true
-          case "jobcount.close" => open = false; closed.countDown()
-          case _ => if (open) count.incrementAndGet()
-        }
-    }
-    def sentinel(group: String): Unit = {
-      sc.setJobGroup(group, "job count sentinel")
-      try spark.range(1).count() finally sc.clearJobGroup()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sentinel("jobcount.open")
-      val r = body
-      sentinel("jobcount.close")
-      assert(closed.await(30, TimeUnit.SECONDS), "closing sentinel never observed")
-      (r, count.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   private lazy val dirs = (1 to 2).map(i => Files.createTempDirectory(s"fedemb$i").toString)
-  private lazy val (first, firstJobs) = jobsOf(runFederated(dirs(0)))
+  private lazy val (first, firstJobs) = SparkJobs.count(spark)(runFederated(dirs(0)))
   private lazy val second = runFederated(dirs(1))
   private lazy val rows = first._2.as[(Long, Seq[Float])].collect()
 

@@ -25,13 +25,6 @@ class GraphIOSpec extends SparkSpec {
     assert(feats.forall(f => f == 0.0f || f == 1.0f))
   }
 
-  test("attribute scan with label keeps the class string") {
-    val n = GraphIO.readWhitespaceAttributesWithLabel(spark, s"$refData/4_attributes_0")
-    val labels = n.select("label").distinct().as[String].collect().toSet
-    assert(labels.contains("Neural_Networks") || labels.contains("Genetic_Algorithms"))
-    assert(labels.forall(_.nonEmpty))
-  }
-
   test("canonical edge CSV scan matches schema and rows") {
     val e = GraphIO.readEdgesCsv(spark, s"$refData/4_edges_0.csv")
     assert(e.count() === 2837L)
@@ -74,27 +67,5 @@ class GraphIOSpec extends SparkSpec {
     assert(back.head.shape === Seq(2, 3))
     assert(back.head.values.toSeq === Seq(1f, 2f, 3f, 4f, 5f, 6f))
     assert(back(1).values.toSeq === Seq(0.5f, -0.5f, 0f))
-  }
-
-  test("parquet catalog: partitioned write, pruned read, dynamic overwrite") {
-    val root = java.nio.file.Files.createTempDirectory("graph-pq").toString
-    import spark.implicits._
-    val n0 = Seq((1L, Seq(1f, 2f)), (2L, Seq(3f, 4f))).toDF("id", "features")
-    val e0 = Seq((1L, 2L)).toDF("source", "target")
-    val n1 = Seq((9L, Seq(9f, 9f))).toDF("id", "features")
-    val e1 = Seq((9L, 9L)).toDF("source", "target")
-    GraphIO.writeGraphParquet(n0, e0, root, "4", "0")
-    GraphIO.writeGraphParquet(n1, e1, root, "4", "1")
-    val (rn0, re0) = GraphIO.readGraphParquet(spark, root, "4", "0")
-    assert(rn0.count() === 2 && re0.count() === 1)
-    assert(rn0.schema.fieldNames.toSeq === Seq("id", "features"))
-    // partition pruning reaches the scan
-    val plan = rn0.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") || !plan.contains("partition_id"),
-      s"no partition pruning:\n$plan")
-    // dynamic overwrite of p0 must not clobber p1
-    GraphIO.writeGraphParquet(n0, e0, root, "4", "0")
-    val (rn1, _) = GraphIO.readGraphParquet(spark, root, "4", "1")
-    assert(rn1.count() === 1)
   }
 }
