@@ -27,26 +27,34 @@ object FedTrain {
   final case class SessionResult(result: Federation.Result,
                                  refs: Seq[BundleIO.BundleRef])
 
+  /** ETL: merge each partition's raw local/central stores into
+    * canonical node/edge tables (merge.py parity), then split + persist
+    * its bundle, and pass the cached graph and the bundle's ref to
+    * `withBundle`. Partitions are independent, so their ETL (dominated
+    * by the double edge-split's iterative jobs) submits Spark jobs
+    * CONCURRENTLY from driver threads — Spark's scheduler interleaves
+    * the small per-partition jobs instead of running P serial critical
+    * paths. Each future touches only its own partition's paths and
+    * cached graph; results keep pid order.
+    */
+  private def writeBundles[T](spark: SparkSession, storeDir: String, graphId: String,
+                              pids: Seq[String], outDir: String, hp: SageHyperParams)
+                             (withBundle: (PropertyGraph, BundleIO.BundleRef) => T): Seq[T] =
+    graft.util.Par.mapAll(pids) { pid =>
+      val m = MergePipeline.merge(spark, storeDir, storeDir, graphId, pid)
+      val g = PropertyGraph(m.nodes, m.edges).cache()
+      try withBundle(g, BundleIO.write(spark, s"$outDir/bundles", s"${graphId}_$pid", g,
+        seed = hp.seed))
+      finally g.unpersist()
+    }
+
   /** Programmatic form used by the CLI and the end-to-end spec. */
   def runSession(spark: SparkSession, storeDir: String, graphId: String,
                  pids: Seq[String], rounds: Int, epochs: Int, outDir: String,
                  hp: SageHyperParams = SageHyperParams(),
                  logger: GraftLogger = GraftLogger.stdout()): SessionResult = {
-    // 1. ETL: merge raw local/central stores into canonical node/edge
-    //    tables (merge.py parity), then split + persist bundles.
-    //    Partitions are independent, so their ETL (dominated by the
-    //    double edge-split's iterative jobs) submits Spark jobs
-    //    CONCURRENTLY from driver threads — Spark's scheduler
-    //    interleaves the small per-partition jobs instead of running
-    //    P serial critical paths. Each future touches only its own
-    //    partition's paths and cached graph; results keep pid order.
-    val refs = graft.util.Par.mapAll(pids) { pid =>
-      val m = MergePipeline.merge(spark, storeDir, storeDir, graphId, pid)
-      val g = PropertyGraph(m.nodes, m.edges).cache()
-      try BundleIO.write(spark, s"$outDir/bundles", s"${graphId}_$pid", g,
-        seed = hp.seed)
-      finally g.unpersist()
-    }
+    // 1. ETL: merged graphs → split + persisted bundles
+    val refs = writeBundles(spark, storeDir, graphId, pids, outDir, hp)((_, ref) => ref)
     require(refs.map(_.numFeatures).distinct.size == 1,
       s"partitions disagree on feature count: $refs")
 
@@ -77,19 +85,12 @@ object FedTrain {
                           outDir: String, budgetGB: Double,
                           hp: SageHyperParams = SageHyperParams(),
                           logger: GraftLogger = GraftLogger.stdout()): Federation.Result = {
-    val withCost = graft.util.Par.mapAll(pids) { pid =>
-      val m = MergePipeline.merge(spark, storeDir, storeDir, graphId, pid)
-      val g = PropertyGraph(m.nodes, m.edges).cache()
-      try {
-        val ref = BundleIO.write(spark, s"$outDir/bundles", s"${graphId}_$pid", g,
-          seed = hp.seed)
-        // bill the partition's REAL feature width — the cost model's
-        // nFeatures default is Cora's 1433, which under-admits any
-        // wider-featured graph straight into the OOM this budget exists
-        // to prevent
-        val cost = MemCost.ramGB(g.numNodes, g.numEdges, ref.numFeatures)
-        (ref, cost)
-      } finally g.unpersist()
+    val withCost = writeBundles(spark, storeDir, graphId, pids, outDir, hp) { (g, ref) =>
+      // bill the partition's REAL feature width — the cost model's
+      // nFeatures default is Cora's 1433, which under-admits any
+      // wider-featured graph straight into the OOM this budget exists
+      // to prevent
+      (ref, MemCost.ramGB(g.numNodes, g.numEdges, ref.numFeatures))
     }
     val init = new LocalGraphSage(hp, Map.empty, Map.empty,
       withCost.head._1.numFeatures).initializeWeights()

@@ -520,14 +520,12 @@ object NearDup {
     prefixVerify(prefixCandidates(prefix, threshold), gidSets, threshold)
   }
 
-  // The five stages below are package-private so tools.ProbeQ85 times
-  // the REAL operator stage-by-stage instead of a drifting copy
-  // (ADVICE round-10); `prefixJaccardPairs` is their composition.
+  // The stages below, one method each, compose to `prefixJaccardPairs`.
 
   /** Stage 1: distinct shingle set per doc — feeds the df count, the
     * prefix build, and the verify join; materialized once.
     */
-  private[graft] def prefixShingleSets(df: DataFrame, idCol: String, textCol: String,
+  private def prefixShingleSets(df: DataFrame, idCol: String, textCol: String,
                                        shingleN: Int): DataFrame =
     df.select(col(idCol).as("__sid"),
         array_distinct(TextOps.wordShingles(col(textCol), shingleN)).as("__sh"))
@@ -535,14 +533,14 @@ object NearDup {
       .localCheckpoint()
 
   /** Stage 2: one (doc, set-size, shingle) row per set member. */
-  private[graft] def prefixShingleExplode(sh: DataFrame): DataFrame =
+  private def prefixShingleExplode(sh: DataFrame): DataFrame =
     sh.select(col("__sid"), size(col("__sh")).as("__n"),
       explode(col("__sh")).as("__g"))
 
   /** Stage 2b: global rarest-first total order key — (document
     * frequency, shingle).
     */
-  private[graft] def prefixDocFreq(ex: DataFrame): DataFrame =
+  private def prefixDocFreq(ex: DataFrame): DataFrame =
     ex.groupBy(col("__g")).agg(count(lit(1)).as("__df"))
 
   /** Stage 2c: the shingle dictionary — every DISTINCT shingle mapped
@@ -561,7 +559,7 @@ object NearDup {
     * (vocabulary-sized input, every sort task bounded by a range
     * shard — no single-task window).
     */
-  private[graft] def prefixGidTable(ex: DataFrame): DataFrame =
+  private def prefixGidTable(ex: DataFrame): DataFrame =
     graft.operators.DistributedRank.prefix(
         prefixDocFreq(ex).withColumn("__one", lit(1)),
         Seq("__one"), Seq("__df", "__g"))
@@ -572,7 +570,7 @@ object NearDup {
     * (the intern join); everything downstream is long-typed. Consumed
     * exactly once (by [[prefixGidSets]]), so no checkpoint here.
     */
-  private[graft] def prefixInterned(ex: DataFrame, gids: DataFrame): DataFrame =
+  private def prefixInterned(ex: DataFrame, gids: DataFrame): DataFrame =
     ex.join(gids, Seq("__g"))
       .select(col("__sid"), col("__n"), col("__gid"))
 
@@ -583,7 +581,7 @@ object NearDup {
     * materialization of corpus content past the shingle table, and it
     * is the SMALLEST faithful representation: |set| longs per doc.
     */
-  private[graft] def prefixGidSets(exg: DataFrame): DataFrame =
+  private def prefixGidSets(exg: DataFrame): DataFrame =
     exg.groupBy(col("__sid"), col("__n"))
       .agg(sort_array(collect_list(col("__gid"))).as("__ord"))
       .localCheckpoint()
@@ -594,7 +592,7 @@ object NearDup {
     * input. The sorted gid array is the doc's shingle list already in
     * prefix order, so this stage is a pure slice + explode.
     */
-  private[graft] def prefixRows(gidSets: DataFrame, threshold: Double): DataFrame = {
+  private def prefixRows(gidSets: DataFrame, threshold: Double): DataFrame = {
     val pLen = (col("__n") - ceil(lit(threshold) * col("__n") - lit(1e-9)) + 1).cast("int")
     gidSets
       .select(col("__sid"), col("__n"),
@@ -610,7 +608,7 @@ object NearDup {
     * multi-million-row sides); with real stats the verify plans from
     * actual candidate counts.
     */
-  private[graft] def prefixCandidates(prefix: DataFrame, threshold: Double): DataFrame = {
+  private def prefixCandidates(prefix: DataFrame, threshold: Double): DataFrame = {
     val minOverlap = ceil(
       lit(threshold / (1.0 + threshold)) * (col("l.__n") + col("r.__n")) - lit(1e-9))
     prefix.as("l")
@@ -637,7 +635,7 @@ object NearDup {
     * triple and the one double division are exactly the old ones, so
     * the output rows are bit-identical.
     */
-  private[graft] def prefixVerify(cand: DataFrame, gidSets: DataFrame,
+  private def prefixVerify(cand: DataFrame, gidSets: DataFrame,
                                   threshold: Double): DataFrame = {
     cand
       .join(gidSets.select(col("__sid").as("id_a"), col("__n").as("__na"),

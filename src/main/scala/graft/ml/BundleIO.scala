@@ -24,12 +24,13 @@ import graft.graph.{EdgeSplitter, PropertyGraph}
   * trainer owns — the same topology as the reference, where each client
   * process reads its own partition's CSVs locally (fl_client.py:194-208).
   *
-  * Scale: each sub-table is a partitioned text directory (no
-  * coalesce-to-1); a bundle is one graph PARTITION, sized to fit one
-  * task by the system's own admission model (mem.py), so the task-side
-  * load is bounded by design. Works on any Hadoop-compatible FS (local,
-  * HDFS, S3A) — on a 1000-executor cluster the loads are data-local
-  * reads with zero driver involvement.
+  * Scale: a bundle is one graph PARTITION, sized to fit one task by
+  * the system's own admission model (mem.py), so each sub-table is
+  * written by one task as one sorted part file, and the task-side load
+  * opens one file a sub-table whatever the session's shuffle
+  * partitions. Works on any Hadoop-compatible FS (local, HDFS, S3A) —
+  * on a 1000-executor cluster the loads are data-local reads with zero
+  * driver involvement.
   */
 object BundleIO {
 
@@ -69,13 +70,10 @@ object BundleIO {
     // iteration) that shift between runs — and the trainer's seeded
     // epoch shuffle permutes the LOADED order, so an order change is a
     // training-dynamics change (measured: same example set, different
-    // AUC run to run). A global sort pins it; range-partitioned sorted
-    // part files concatenate to the total order however the partition
-    // boundaries fall, at the cost of one bounded ETL-time shuffle.
-    writeLines(trainSplit.examples.orderBy("source", "target", "label"),
-      s"$base/train", col("source"), col("target"), col("label"))
-    writeLines(testSplit.examples.orderBy("source", "target", "label"),
-      s"$base/test", col("source"), col("target"), col("label"))
+    // AUC run to run). The one sorted part file pins it.
+    val example = Seq("source", "target", "label")
+    writeLines(trainSplit.examples, s"$base/train", example, example.map(col): _*)
+    writeLines(testSplit.examples, s"$base/test", example, example.map(col): _*)
     bundleRef(spark, dir, name)
   }
 
@@ -122,20 +120,23 @@ object BundleIO {
 
   /** The `features` and `edges` sub-tables both bundle kinds share.
     * `load` builds maps from both, so their row order never reaches
-    * training: no global sort, only a sort within each partition, which
-    * adds no exchange and no job, so that the bytes stay identical run
-    * to run.
+    * training; they are sorted so that the bytes stay identical run to
+    * run.
     */
   private def writeGraph(nodes: DataFrame, edges: DataFrame, base: String): Unit = {
-    writeLines(nodes.sortWithinPartitions("id"), s"$base/features",
+    writeLines(nodes, s"$base/features", Seq("id"),
       col("id"), col("features").cast("array<string>"))
-    writeLines(edges.sortWithinPartitions("source", "target"), s"$base/edges",
+    writeLines(edges, s"$base/edges", Seq("source", "target"),
       col("source"), col("target"))
   }
 
-  /** One sub-table as space-separated text lines, overwriting `path`. */
-  private def writeLines(df: DataFrame, path: String, cols: Column*): Unit =
-    df.select(concat_ws(" ", cols: _*)).write.mode("overwrite").text(path)
+  /** One sub-table as space-separated text lines in one part file,
+    * sorted by `sortBy`, overwriting `path`. The sort runs inside the
+    * one task, so it adds no exchange and no job.
+    */
+  private def writeLines(df: DataFrame, path: String, sortBy: Seq[String], cols: Column*): Unit =
+    df.coalesce(1).sortWithinPartitions(sortBy.map(col): _*)
+      .select(concat_ws(" ", cols: _*)).write.mode("overwrite").text(path)
 
   /** The driver's handle on a written bundle: its feature width, read
     * off the first line of the `features` sub-table just written (Hadoop

@@ -1,9 +1,13 @@
 package graft.ml
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
 import breeze.linalg.{DenseMatrix, DenseVector}
 
 import graft.fed.FedAvg.Weights
 import graft.sources.LayerTensor
+import graft.util.Par
 
 /** Hyperparameters — defaults mirror the reference's supervised model
   * (models/supervised.py:50-63): samples [20,10], layers [10,10],
@@ -65,6 +69,14 @@ object SageHyperParams {
   * batch. Both link towers (src ++ dst) share one batch evaluation, so
   * src/dst overlap dedups too.
   *
+  * Within a batch, independent products (separate output buffers,
+  * shared read-only inputs) run as `Par.mapAll` tasks: the four layer-1
+  * forward products, the four layer-2 backward products, the two
+  * layer-1 weight gradients and the four per-matrix Adam updates. Every
+  * buffer is still produced by one sequential kernel that adds in a
+  * fixed order, so the results are bit-identical to running the tasks
+  * one after another.
+  *
   * Math is Double-precision Breeze (weights cross the FedModel boundary
   * as Float per the engine-wide LayerTensor contract). Neighbor
   * sampling inside the trainer is seeded-deterministic; sentinel -1
@@ -87,19 +99,6 @@ final class LocalGraphSage(
     * chunk·k1 distinct nodes.
     */
   private val inferChunk = math.max(hp.batchSize, 8192 / math.max(k1, 1))
-
-  /** Within-batch kernel parallelism: independent products (separate
-    * output buffers, shared read-only inputs) run on a few threads.
-    * Every buffer is still produced by the same sequential kernel and
-    * accumulated in the same fixed order, so results are BIT-IDENTICAL
-    * to the serial schedule — this is a wall-clock lever only. Gated on
-    * weight-matrix size so the supervised profile's microsecond
-    * products (h=5) don't pay future overhead.
-    */
-  private val parallelKernels = numFeatures.toLong * h1 >= 64 * 1024
-  private def inParallel(tasks: Array[() => Unit]): Unit =
-    if (parallelKernels) { graft.util.Par.mapAll(tasks.toSeq)(_.apply()); () }
-    else tasks.foreach(_.apply())
 
   /** Feature rows in sparse form; absent ids contribute zeros. */
   private val featureRows: Map[Long, SparseRow] =
@@ -344,23 +343,20 @@ final class LocalGraphSage(
 
   // ---- forward ----
 
-  /** Everything backward needs, on the batch's distinct-node sets. The
-    * xt/mt columns are the (masked) layer-1 inputs.
+  /** Everything backward needs, on the batch's distinct-node sets: the
+    * batch's inputs and the weight-dependent activations.
     */
   private final class BatchCache(
-      val plan: BatchPlan,
-      val xt0: SparseCols, val mt1: SparseCols,
-      val xt1: SparseCols, val mt2: SparseCols,
+      val in: BatchInputs,
       val a1r: DenseMatrix[Double], val a1n: DenseMatrix[Double],
       val h1rd: DenseMatrix[Double], val mhd: DenseMatrix[Double],
-      val maskH1r: DenseMatrix[Double], val maskMh: DenseMatrix[Double],
       val emb: DenseMatrix[Double], val norms: DenseVector[Double])
 
   /** Everything weight-INDEPENDENT about a batch: the sample plan, the
-    * layer-1 input columns, and the dropout masks — i.e. all of a
-    * batch's RNG consumption. Preparing batch t+1 while batch t's
-    * weight-dependent products run leaves the RNG call sequence (and so
-    * every sampled id and mask bit) identical to the serial schedule.
+    * layer-1 input columns (xt: a node's own features, mt: its sampled
+    * neighbours' mean, both masked), and the dropout masks — i.e. all of
+    * a batch's RNG consumption, so that `fit` can prepare batch t+1
+    * while batch t's weight-dependent products run.
     */
   private final class BatchInputs(
       val plan: BatchPlan,
@@ -395,32 +391,53 @@ final class LocalGraphSage(
     }
     // input dropout, per distinct node per batch (Keras GraphSAGE drops
     // inputs); the h1-level masks are also drawn HERE so every rng call
-    // stays in the prepare phase — same relative order as the serial code
+    // stays in the prepare phase
     if (doDrop) Seq(xt0, mt1, xt1, mt2).foreach(_.dropout(1.0 - hp.dropout, numFeatures, rng))
     val maskH1r = if (doDrop) newMask(nU0, d1, rng) else null
     val maskMh = if (doDrop) newMask(nU0, d1, rng) else null
     new BatchInputs(plan, xt0, mt1, xt1, mt2, maskH1r, maskMh)
   }
 
-  /** Forward the batch over its deduped sample tree; `emb` rows align
-    * with `plan.u0` (use `plan.rootPos` to read a batch position).
+  /** Forward the batch over its deduped sample tree with dropout off;
+    * `emb` rows align with `plan.u0` (use `plan.rootPos` to read a batch
+    * position).
     */
-  private def forwardBatch(roots: Array[Long], rng: java.util.Random,
-                           train: Boolean): BatchCache =
-    forwardPrepared(prepareBatch(roots, rng, train))
+  private def forwardBatch(roots: Array[Long], rng: java.util.Random): BatchCache =
+    forwardPrepared(prepareBatch(roots, rng, train = false))
+
+  /** A pair batch's roots laid out src ++ dst: pair i's towers are
+    * positions i and b + i.
+    */
+  private def pairRoots(pairs: Array[(Long, Long, Int)]): Array[Long] = {
+    val b = pairs.length
+    val roots = new Array[Long](2 * b)
+    var i = 0
+    while (i < b) { roots(i) = pairs(i)._1; roots(b + i) = pairs(i)._2; i += 1 }
+    roots
+  }
+
+  /** The link score of the pair whose towers are u0 rows `si` and `di`:
+    * the sigmoid of their embeddings' dot product.
+    */
+  private def linkScore(bc: BatchCache, si: Int, di: Int): Double = {
+    val nU0 = bc.in.plan.u0.length
+    var z = 0.0; var c = 0
+    while (c < d2) { z += bc.emb.data(c * nU0 + si) * bc.emb.data(c * nU0 + di); c += 1 }
+    1.0 / (1.0 + math.exp(-z))
+  }
 
   /** The weight-dependent half of the forward pass. */
   private def forwardPrepared(bi: BatchInputs): BatchCache = {
     val plan = bi.plan
     val nU0 = plan.u0.length; val nU1 = plan.u1.length
     // layer 1 — shared weights on roots and level-1 nodes, written as
-    // `[x·W1s | m·W1n] + b1`. The four products fill disjoint halves —
-    // see `inParallel` for the bit-identity argument.
+    // `[x·W1s | m·W1n] + b1`. The four products fill disjoint halves.
     val a1r = DenseMatrix.zeros[Double](nU0, d1)
     val a1n = DenseMatrix.zeros[Double](nU1, d1)
-    inParallel(Array(
-      () => bi.xt0.forward(w1s, h1, b1.data, a1r, 0), () => bi.mt1.forward(w1n, h1, b1.data, a1r, h1),
-      () => bi.xt1.forward(w1s, h1, b1.data, a1n, 0), () => bi.mt2.forward(w1n, h1, b1.data, a1n, h1)))
+    Par.mapAll(Seq((bi.xt0, w1s, a1r, 0), (bi.mt1, w1n, a1r, h1),
+        (bi.xt1, w1s, a1n, 0), (bi.mt2, w1n, a1n, h1))) {
+      case (x, w, out, off) => x.forward(w, h1, b1.data, out, off)
+    }
     val h1n = relu(a1n)
     // layer-2 neighbor mean per distinct root, from the multiset counts
     val mh = DenseMatrix.zeros[Double](nU0, d1)
@@ -436,11 +453,9 @@ final class LocalGraphSage(
       }
       j += 1
     }
-    val maskH1r = bi.maskH1r
-    val maskMh = bi.maskMh
     val h1rd = relu(a1r)
-    if (maskH1r != null) h1rd :*= maskH1r
-    if (maskMh != null) mh :*= maskMh
+    if (bi.maskH1r != null) h1rd :*= bi.maskH1r
+    if (bi.maskMh != null) mh :*= bi.maskMh
     val h2 = concatBias(h1rd * w2s, mh * w2n, b2) // linear activation
     // row-wise L2 normalize
     val emb = DenseMatrix.zeros[Double](nU0, d2)
@@ -454,8 +469,7 @@ final class LocalGraphSage(
       c = 0; while (c < d2) { emb.data(c * nU0 + i) = h2.data(c * nU0 + i) / norms(i); c += 1 }
       i += 1
     }
-    new BatchCache(plan, bi.xt0, bi.mt1, bi.xt1, bi.mt2, a1r, a1n, h1rd, mh,
-      maskH1r, maskMh, emb, norms)
+    new BatchCache(bi, a1r, a1n, h1rd, mh, emb, norms)
   }
 
   // ---- gradients ----
@@ -472,7 +486,8 @@ final class LocalGraphSage(
     * accumulating into `g`. Mutates dEmbU's downstream temporaries only.
     */
   private def backwardBatch(bc: BatchCache, dEmbU: DenseMatrix[Double], g: Grads): Unit = {
-    val nU0 = bc.plan.u0.length; val nU1 = bc.plan.u1.length
+    val bi = bc.in
+    val nU0 = bi.plan.u0.length; val nU1 = bi.plan.u1.length
     // through L2 normalize: dH2 = (g - emb·(g·emb)) / norm, per row
     val dH2 = DenseMatrix.zeros[Double](nU0, d2)
     var i = 0
@@ -492,21 +507,18 @@ final class LocalGraphSage(
     val dZ2s = dH2(::, 0 until h2)
     val dZ2n = dH2(::, h2 until d2)
     g.gB2 :+= colSums(dH2)
-    val p2 = new Array[DenseMatrix[Double]](4)
-    inParallel(Array(
-      () => p2(0) = bc.h1rd.t * dZ2s, () => p2(1) = bc.mhd.t * dZ2n,
-      () => p2(2) = dZ2s * w2s.t, () => p2(3) = dZ2n * w2n.t))
-    addInPlace(g.gW2s, p2(0))
-    addInPlace(g.gW2n, p2(1))
-    val dH1r = p2(2)
-    val dMh = p2(3)
-    if (bc.maskH1r != null) dH1r :*= bc.maskH1r
-    if (bc.maskMh != null) dMh :*= bc.maskMh
+    val Seq(gW2s, gW2n, dH1r, dMh) = Par.mapAll(Seq[() => DenseMatrix[Double]](
+      () => bc.h1rd.t * dZ2s, () => bc.mhd.t * dZ2n,
+      () => dZ2s * w2s.t, () => dZ2n * w2n.t))(_.apply())
+    addInPlace(g.gW2s, gW2s)
+    addInPlace(g.gW2n, gW2n)
+    if (bi.maskH1r != null) dH1r :*= bi.maskH1r
+    if (bi.maskMh != null) dMh :*= bi.maskMh
     // spread dMh back to level-1 rows via the multiset counts
     val dH1n = DenseMatrix.zeros[Double](nU1, d1)
     var j = 0
     while (j < nU0) {
-      val idxs = bc.plan.l1idx(j); val cnt = bc.plan.l1cnt(j)
+      val idxs = bi.plan.l1idx(j); val cnt = bi.plan.l1cnt(j)
       var t = 0
       while (t < idxs.length) {
         val s = cnt(t).toDouble / k1; val dst = idxs(t)
@@ -523,9 +535,10 @@ final class LocalGraphSage(
     g.gB1 :+= colSums(dH1n)
     // gW1s and gW1n accumulate in parallel, each in a fixed order (roots,
     // then level-1 nodes), so the Double addition sequence is fixed
-    inParallel(Array(
-      () => { bc.xt0.backward(dH1r, 0, h1, g.gW1s); bc.xt1.backward(dH1n, 0, h1, g.gW1s) },
-      () => { bc.mt1.backward(dH1r, h1, h1, g.gW1n); bc.mt2.backward(dH1n, h1, h1, g.gW1n) }))
+    Par.mapAll(Seq((bi.xt0, bi.xt1, 0, g.gW1s), (bi.mt1, bi.mt2, h1, g.gW1n))) {
+      case (roots, level1, off, gw) =>
+        roots.backward(dH1r, off, h1, gw); level1.backward(dH1n, off, h1, gw)
+    }
   }
 
   /** Zero `d` wherever the pre-activation `a` was non-positive. */
@@ -537,41 +550,25 @@ final class LocalGraphSage(
 
   // ---- training (G8: Adam + BCE) ----
 
-  /** Shared forward + loss + dEmb for a labeled pair batch: one plan
-    * over src ++ dst (the towers share weights AND the deduped node
-    * evaluations). Returns (cache, mean-scaled loss sum, dEmb by u0 row).
-    */
-  private def pairForward(src: Array[Long], dst: Array[Long], labels: Array[Int],
-                          rng: java.util.Random, train: Boolean)
-      : (BatchCache, Double, DenseMatrix[Double]) = {
-    val b = src.length
-    val roots = new Array[Long](2 * b)
-    System.arraycopy(src, 0, roots, 0, b)
-    System.arraycopy(dst, 0, roots, b, b)
-    pairForwardPrepared(prepareBatch(roots, rng, train), labels)
-  }
-
-  /** `pairForward` from already-prepared batch inputs (the pipelined fit
-    * path); roots were laid out src ++ dst, so position i / b+i are the
-    * pair's towers.
+  /** Forward + loss + dEmb for a prepared pair batch whose roots were
+    * laid out by `pairRoots` (the towers share weights AND the deduped
+    * node evaluations). Returns (cache, loss sum, dEmb by u0 row).
     */
   private def pairForwardPrepared(bi: BatchInputs, labels: Array[Int])
       : (BatchCache, Double, DenseMatrix[Double]) = {
     val b = labels.length
     val bc = forwardPrepared(bi)
-    val nU0 = bc.plan.u0.length
+    val nU0 = bi.plan.u0.length
     val dEmbU = DenseMatrix.zeros[Double](nU0, d2)
     var loss = 0.0
     var i = 0
     while (i < b) {
-      val si = bc.plan.rootPos(i); val di = bc.plan.rootPos(b + i)
-      var z = 0.0; var c = 0
-      while (c < d2) { z += bc.emb.data(c * nU0 + si) * bc.emb.data(c * nU0 + di); c += 1 }
-      val s = 1.0 / (1.0 + math.exp(-z))
+      val si = bi.plan.rootPos(i); val di = bi.plan.rootPos(b + i)
+      val s = linkScore(bc, si, di)
       val y = labels(i)
       loss -= (y * math.log(math.max(s, 1e-12)) + (1 - y) * math.log(math.max(1 - s, 1e-12)))
       val dz = (s - y) / b // BCE+sigmoid combined, mean reduction
-      c = 0
+      var c = 0
       while (c < d2) {
         dEmbU.data(c * nU0 + si) += dz * bc.emb.data(c * nU0 + di)
         dEmbU.data(c * nU0 + di) += dz * bc.emb.data(c * nU0 + si)
@@ -582,23 +579,25 @@ final class LocalGraphSage(
     (bc, loss, dEmbU)
   }
 
-  /** One gradient step on a batch; returns mean BCE loss. */
-  private[ml] def trainBatch(src: Array[Long], dst: Array[Long], labels: Array[Int],
-                             rng: java.util.Random): Double = {
-    val (bc, loss, dEmbU) = pairForward(src, dst, labels, rng, train = true)
+  /** A pair batch's inputs, drawn with dropout on, and its labels. */
+  private def prepareTrain(pairs: Array[(Long, Long, Int)],
+                           rng: java.util.Random): (BatchInputs, Array[Int]) =
+    (prepareBatch(pairRoots(pairs), rng, train = true), pairs.map(_._3))
+
+  /** Mean loss and gradients of one prepared pair batch. */
+  private def gradients(bi: BatchInputs, labels: Array[Int]): (Double, Grads) = {
+    val (bc, loss, dEmbU) = pairForwardPrepared(bi, labels)
     val g = new Grads
     backwardBatch(bc, dEmbU, g)
-    adamStep(g)
-    loss / src.length
+    (loss / labels.length, g)
   }
 
-  private[ml] def computeGrads(src: Array[Long], dst: Array[Long], labels: Array[Int],
+  /** Gradient-check hook: one batch of `fit`'s math without the update. */
+  private[ml] def computeGrads(pairs: Array[(Long, Long, Int)],
                                rng: java.util.Random): (Double, Seq[Array[Double]]) = {
-    // gradient-check hook: same math as trainBatch without the update
-    val (bc, loss, dEmbU) = pairForward(src, dst, labels, rng, train = true)
-    val g = new Grads
-    backwardBatch(bc, dEmbU, g)
-    (loss / src.length, Seq(g.gW1s, g.gW1n, g.gB1.toArray,
+    val (bi, labels) = prepareTrain(pairs, rng)
+    val (loss, g) = gradients(bi, labels)
+    (loss, Seq(g.gW1s, g.gW1n, g.gB1.toArray,
       rowMajor(g.gW2s), rowMajor(g.gW2n), g.gB2.toArray))
   }
 
@@ -614,9 +613,8 @@ final class LocalGraphSage(
     val lr = hp.learningRate * math.sqrt(1 - math.pow(beta2, adamT)) / (1 - math.pow(beta1, adamT))
     val mats = Array((w1s, g.gW1s, 0), (w1n, g.gW1n, 1),
       (w2s.data, g.gW2s.data, 2), (w2n.data, g.gW2n.data, 3))
-    // per-slot updates touch disjoint state; each slot's loop is
-    // unchanged, so the update is bit-identical to the serial schedule
-    inParallel(mats.map { case (wd, gd, idx) => () => {
+    // per-slot updates touch disjoint state
+    Par.mapAll(mats.toSeq) { case (wd, gd, idx) =>
       val md = adamM(idx); val vd = adamV(idx)
       var i = 0
       while (i < wd.length) {
@@ -626,7 +624,7 @@ final class LocalGraphSage(
         wd(i) -= lr * md(i) / (math.sqrt(vd(i)) + adamEps)
         i += 1
       }
-    }})
+    }
     val vecs = Array((b1, g.gB1, 0), (b2, g.gB2, 1))
     vecs.foreach { case (bvec, gb, idx) =>
       val bd = bvec.data; val gd = gb.data
@@ -656,62 +654,33 @@ final class LocalGraphSage(
   /** G8 — fit for `epochs` over the labeled link examples; returns the
     * mean loss per epoch. Shuffling and sampling are seeded.
     *
-    * On the large-layer profile, batch t+1's weight-independent
-    * preparation (sampling, feature fills, masks — ALL rng consumption)
-    * runs on a background thread while batch t's weight-dependent
-    * compute runs here. The futures are created strictly one at a time
-    * and the rng is only ever touched inside them, so the rng call
-    * sequence — and with it every sampled neighbor, shuffle, and mask —
-    * is identical to the serial loop. Losses and updates are unchanged
-    * math on unchanged inputs: bit-identical, wall-clock shorter.
+    * Batch t+1's weight-independent preparation (sampling, feature
+    * columns, masks — ALL rng consumption) runs in a `Future` while batch
+    * t's weight-dependent compute runs here. The futures are created one
+    * at a time, each after the previous one is awaited, and the rng is
+    * touched only inside them and in the epoch's shuffle, so the rng call
+    * sequence — every shuffle, sampled neighbour and mask — is the one a
+    * batch-after-batch loop would make.
     */
   def fit(examples: Array[(Long, Long, Int)], epochs: Int): Seq[Double] = {
     val rng = fitRng
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
+    implicit val ec: ExecutionContext = ExecutionContext.global
     (1 to epochs).map { _ =>
-      val order = shuffle(examples.indices.toArray, rng)
-      var lossSum = 0.0; var nBatches = 0
-      if (!parallelKernels) {
-        order.grouped(hp.batchSize).foreach { idxs =>
-          val src = idxs.map(i => examples(i)._1)
-          val dst = idxs.map(i => examples(i)._2)
-          val lab = idxs.map(i => examples(i)._3)
-          lossSum += trainBatch(src, dst, lab, rng)
-          nBatches += 1
-        }
-      } else if (order.nonEmpty) {
-        // explicit empty guard: without it, prep(batches(0)) would throw
-        // inside a never-awaited Future — accidentally benign, silently
-        // swallowed
-        val batches = order.grouped(hp.batchSize).toArray
-        def prep(idxs: Array[Int]): (BatchInputs, Array[Int]) = {
-          val b = idxs.length
-          val roots = new Array[Long](2 * b)
-          var i = 0
-          while (i < b) {
-            roots(i) = examples(idxs(i))._1
-            roots(b + i) = examples(idxs(i))._2
-            i += 1
-          }
-          (prepareBatch(roots, rng, train = true), idxs.map(i => examples(i)._3))
-        }
-        var next = scala.concurrent.Future(prep(batches(0)))
-        var t = 0
-        while (t < batches.length) {
-          val (bi, lab) = scala.concurrent.Await.result(next,
-            scala.concurrent.duration.Duration.Inf)
-          if (t + 1 < batches.length) next = scala.concurrent.Future(prep(batches(t + 1)))
-          val (bc, loss, dEmbU) = pairForwardPrepared(bi, lab)
-          val g = new Grads
-          backwardBatch(bc, dEmbU, g)
-          adamStep(g)
-          lossSum += loss / lab.length
-          nBatches += 1
-          t += 1
-        }
+      val batches = shuffle(examples.indices.toArray, rng).grouped(hp.batchSize)
+        .map(_.map(examples(_))).toArray
+      def prepare(t: Int) = Future(prepareTrain(batches(t), rng))
+      var next = if (batches.nonEmpty) prepare(0) else null
+      var lossSum = 0.0
+      var t = 0
+      while (t < batches.length) {
+        val (bi, labels) = Await.result(next, Duration.Inf)
+        if (t + 1 < batches.length) next = prepare(t + 1)
+        val (loss, g) = gradients(bi, labels)
+        adamStep(g)
+        lossSum += loss
+        t += 1
       }
-      lossSum / math.max(nBatches, 1)
+      lossSum / math.max(batches.length, 1)
     }
   }
 
@@ -732,19 +701,10 @@ final class LocalGraphSage(
     var off = 0
     examples.grouped(inferChunk).foreach { batch =>
       val b = batch.length
-      val roots = new Array[Long](2 * b)
+      val bc = forwardBatch(pairRoots(batch), rng)
+      val rootPos = bc.in.plan.rootPos
       var i = 0
-      while (i < b) { roots(i) = batch(i)._1; roots(b + i) = batch(i)._2; i += 1 }
-      val bc = forwardBatch(roots, rng, train = false)
-      val nU0 = bc.plan.u0.length
-      i = 0
-      while (i < b) {
-        val si = bc.plan.rootPos(i); val di = bc.plan.rootPos(b + i)
-        var z = 0.0; var c = 0
-        while (c < d2) { z += bc.emb.data(c * nU0 + si) * bc.emb.data(c * nU0 + di); c += 1 }
-        out(off + i) = 1.0 / (1.0 + math.exp(-z))
-        i += 1
-      }
+      while (i < b) { out(off + i) = linkScore(bc, rootPos(i), rootPos(b + i)); i += 1 }
       off += b
     }
     out
@@ -809,10 +769,10 @@ final class LocalGraphSage(
   def genEmbeddings(nodes: Array[Long]): Array[(Long, Array[Float])] = {
     val rng = new java.util.Random(hp.seed ^ 0x3bedd179L)
     nodes.grouped(inferChunk).flatMap { batch =>
-      val bc = forwardBatch(batch, rng, train = false)
-      val nU0 = bc.plan.u0.length
+      val bc = forwardBatch(batch, rng)
+      val nU0 = bc.in.plan.u0.length
       batch.indices.map { i =>
-        val row = bc.plan.rootPos(i)
+        val row = bc.in.plan.rootPos(i)
         val v = new Array[Float](d2)
         var c = 0; while (c < d2) { v(c) = bc.emb.data(c * nU0 + row).toFloat; c += 1 }
         (batch(i), v)

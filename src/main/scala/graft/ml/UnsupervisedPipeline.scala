@@ -35,18 +35,15 @@ import graft.sources.{GraftLogger, GraphIO}
   */
 object UnsupervisedPipeline {
 
-  /** Per-partition unsupervised bundles (graph + walk spec; the client
-    * samples its pairs at load). Partitions are independent and bundle
-    * writes are order-canonical, so their write jobs submit concurrently
-    * from driver threads (same rationale as FedTrain's ETL).
+  /** One partition's unsupervised bundle (graph + walk spec, with the
+    * reference's walk length and count; the client samples its pairs at
+    * load). Partitions are independent and bundle writes are
+    * order-canonical, so both pipelines call this from concurrent driver
+    * threads (same rationale as FedTrain's ETL).
     */
-  private def writeBundles(spark: SparkSession, parts: Seq[(String, PropertyGraph)],
-                           graphId: String, outDir: String, hp: SageHyperParams,
-                           walkLength: Int, nWalks: Int): Seq[(String, BundleIO.BundleRef)] =
-    graft.util.Par.mapAll(parts) { case (pid, g) =>
-      pid -> BundleIO.writeUnsupervised(spark, s"$outDir/bundles",
-        s"${graphId}_$pid", g, walkLength, nWalks, hp.seed)
-    }
+  private def writeBundle(spark: SparkSession, graphId: String, outDir: String,
+                          hp: SageHyperParams, pid: String, g: PropertyGraph): BundleIO.BundleRef =
+    BundleIO.writeUnsupervised(spark, s"$outDir/bundles", s"${graphId}_$pid", g, seed = hp.seed)
 
   /** One partition's train + emit as a SINGLE one-task Spark job: the
     * task loads its bundle (data-local), trains, and writes its own
@@ -77,8 +74,6 @@ object UnsupervisedPipeline {
   def run(spark: SparkSession, parts: Seq[(String, PropertyGraph)],
           graphId: String, epochs: Int, outDir: String,
           hp: SageHyperParams = SageHyperParams.unsupervised,
-          walkLength: Int = SageHyperParams.unsupervisedWalkLength,
-          nWalks: Int = SageHyperParams.unsupervisedNumWalks,
           logger: GraftLogger = GraftLogger.stdout()): DataFrame = {
     val t0 = System.nanoTime()
     // fused per-partition chains: a partition's training job starts the
@@ -86,8 +81,7 @@ object UnsupervisedPipeline {
     // partition's ETL before any training starts — partitions are
     // independent, so there is nothing to wait for
     graft.util.Par.mapAll(parts) { case (pid, g) =>
-      val ref = BundleIO.writeUnsupervised(spark, s"$outDir/bundles",
-        s"${graphId}_$pid", g, walkLength, nWalks, hp.seed)
+      val ref = writeBundle(spark, graphId, outDir, hp, pid, g)
       trainAndEmitOne(spark, pid, ref,
         m => { m.initialize(); m.fit(epochs); () }, hp, graphId, "nograd", outDir)
     }
@@ -104,10 +98,10 @@ object UnsupervisedPipeline {
   def runFederated(spark: SparkSession, parts: Seq[(String, PropertyGraph)],
                    graphId: String, rounds: Int, epochs: Int, outDir: String,
                    hp: SageHyperParams = SageHyperParams.unsupervised,
-                   walkLength: Int = SageHyperParams.unsupervisedWalkLength,
-                   nWalks: Int = SageHyperParams.unsupervisedNumWalks,
                    logger: GraftLogger = GraftLogger.stdout()): (Federation.Result, DataFrame) = {
-    val refs = writeBundles(spark, parts, graphId, outDir, hp, walkLength, nWalks)
+    val refs = graft.util.Par.mapAll(parts) { case (pid, g) =>
+      pid -> writeBundle(spark, graphId, outDir, hp, pid, g)
+    }
     val init = new LocalGraphSage(hp, Map.empty, Map.empty,
       refs.head._2.numFeatures).initializeWeights()
     val dim = hp.layerSizes._2

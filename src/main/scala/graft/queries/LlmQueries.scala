@@ -277,7 +277,7 @@ object LlmQueries {
     // Oracle: the exact all-pairs Jaccard ≥ 0.6 set (DuckDB twin below).
     // Every LSH output pair is exact-verified, so LSH ⊆ exact always;
     // the (48 hashes, 16 bands × 3 rows) setting was chosen by probing
-    // (tools/ProbeQ27) so the deterministic seeded signatures catch
+    // band settings so the deterministic seeded signatures catch
     // EVERY qualifying pair at sf0.01 and sf0.1 — equality with the
     // exact set, with candidate count within 2% of the true pair count
     // (6,144 candidates for 6,008 true pairs at sf0.1: the S-curve at

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * drift (partition boundaries, aggregate iteration) would silently
   * change training dynamics — the round-5 nondeterminism bug
   * (tools/ProbeDeterminism measured same example set, different order,
-  * different AUC per run). Sorted writes pin it: the example files are
-  * sorted globally, the features and edges within each partition.
+  * different AUC per run). Sorted writes pin it: each sub-table is one
+  * sorted part file.
   */
 class BundleDeterminismSpec extends SparkSpec {
   import spark.implicits._
@@ -93,6 +93,30 @@ class BundleDeterminismSpec extends SparkSpec {
     // a ref built by hand (no carried Hadoop conf) loads the same pairs
     val byHand = BundleIO.load(BundleIO.BundleRef("g", unsupervisedRuns.head._1, 12))
     assert(byHand.trainExamples.toSeq === expected)
+  }
+
+  test("every sub-table is one part file, whatever the session's shuffle partitions") {
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(keys(0), "16")
+    spark.conf.set(keys(1), "false")
+    try {
+      // a merged graph arrives in the merge's shuffle partitioning
+      val g = fixtureGraph()
+      val shuffled = PropertyGraph(g.nodes.repartition(col("id")), g.edges.repartition(col("source")))
+      assert(shuffled.nodes.rdd.getNumPartitions === 16)
+      val out = java.nio.file.Files.createTempDirectory("bdetp").toString
+      BundleIO.write(spark, out, "s", shuffled)
+      BundleIO.writeUnsupervised(spark, out, "u", shuffled)
+      for ((name, subs) <- Seq("s" -> Seq("features", "edges", "train", "test"), "u" -> Seq("features", "edges"));
+           sub <- subs) {
+        val parts = new java.io.File(s"$out/$name/$sub").listFiles().count(_.getName.startsWith("part-"))
+        assert(parts === 1, s"$name/$sub has $parts part files")
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   test("a supervised write over an unsupervised bundle loads as supervised") {

@@ -27,9 +27,8 @@ class GraphSageSpec extends AnyFunSuite {
   test("numerical gradient check validates the full backprop") {
     val sage = tinySage()
     sage.initializeWeights()
-    val src = examples.map(_._1); val dst = examples.map(_._2); val lab = examples.map(_._3)
     def gradsAt(): (Double, Seq[Array[Double]]) =
-      sage.computeGrads(src, dst, lab, new java.util.Random(7))
+      sage.computeGrads(examples, new java.util.Random(7))
     val (_, analytic) = gradsAt()
     val w0 = sage.getWeights
     val eps = 1e-3
